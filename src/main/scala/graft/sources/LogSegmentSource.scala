@@ -1,11 +1,9 @@
 package graft.sources
 
+import graft.store.{DirectParquet, MessageRow}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
@@ -73,6 +71,10 @@ class LogSegmentSource extends TableProvider {
 object LogSegmentSource {
   val Schema: StructType = graft.store.SparkStreamStore.MessageSchema
 
+  /** One Hadoop configuration per JVM for footer and segment reads, so
+    * opening a file never re-parses the configuration resources. */
+  private[sources] lazy val conf: Configuration = new Configuration()
+
   /** Resolve the live messages generation exactly as the store does
     * (`SparkStreamStore.loadGeneration`): `CURRENT` names it, else the
     * plain `messages/` dir. */
@@ -91,46 +93,6 @@ object LogSegmentSource {
         text.toLongOption.getOrElse(0L)
       }
     if (gen == 0L) root + "/messages" else root + s"/messages-g$gen"
-  }
-
-  /** One log segment with its footer-derived zone map. */
-  private[sources] final case class Segment(
-      path: String, bytes: Long, rows: Long, minPos: Long, maxPos: Long)
-
-  /** List segments and read each footer ONCE for exact position min/max +
-    * row count. Driver-side metadata pass, one footer IO per segment —
-    * what the store's own `spark.read.parquet` surface pays anyway, but
-    * here the stats feed planning-time pruning instead of post-schedule
-    * row-group skipping. */
-  private[sources] def listSegments(conf: Configuration, dir: String): Seq[Segment] = {
-    val fs = new HPath(dir).getFileSystem(conf)
-    if (!fs.exists(new HPath(dir))) return Seq.empty
-    fs.listStatus(new HPath(dir)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          val footer = reader.getFooter
-          var rows = 0L
-          var minPos = Long.MaxValue
-          var maxPos = Long.MinValue
-          val posIdx = footer.getFileMetaData.getSchema.getFieldIndex("position")
-          footer.getBlocks.asScala.foreach { block =>
-            rows += block.getRowCount
-            val stats: org.apache.parquet.column.statistics.Statistics[_] =
-              block.getColumns.get(posIdx).getStatistics
-            if (stats != null && stats.hasNonNullValue) {
-              minPos = math.min(minPos, stats.genericGetMin.asInstanceOf[java.lang.Long])
-              maxPos = math.max(maxPos, stats.genericGetMax.asInstanceOf[java.lang.Long])
-            }
-          }
-          // a segment with no stats (shouldn't happen: position is required)
-          // gets an infinite range so it is never wrongly pruned
-          if (minPos > maxPos) { minPos = Long.MinValue; maxPos = Long.MaxValue }
-          Segment(st.getPath.toString, st.getLen, rows, minPos, maxPos)
-        } finally reader.close()
-      }
   }
 
   /** The inclusive position interval implied by the pushable filters. */
@@ -172,18 +134,6 @@ object LogSegmentSource {
     }
     Some(StructType(fields.toIndexedSeq))
   }
-
-  /** Parquet projection for the pruned columns, built from the FILE's own
-    * schema so field repetition matches exactly (the store's direct
-    * writer marks required fields `required`; Spark-written compacted
-    * generations may mark the same fields `optional` — parquet's
-    * projection check demands the requested repetition agree). */
-  private[sources] def parquetProjection(
-      fileSchema: org.apache.parquet.schema.MessageType,
-      columns: Array[String]): org.apache.parquet.schema.MessageType =
-    new org.apache.parquet.schema.MessageType(
-      fileSchema.getName,
-      columns.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
 }
 
 private class LogSegmentTable(props: Map[String, String]) extends Table with SupportsRead {
@@ -212,10 +162,10 @@ private class LogSegmentScanBuilder(root: String)
   private var aggSchema: Option[StructType] = None
 
   // one metadata pass per query planning, shared with the scan
-  private lazy val allSegments: Seq[LogSegmentSource.Segment] = {
-    val conf = new Configuration()
+  private lazy val allSegments: Seq[DirectParquet.Segment] = {
+    val conf = LogSegmentSource.conf
     val fs = new HPath(root).getFileSystem(conf)
-    LogSegmentSource.listSegments(conf, LogSegmentSource.resolveMessagesDir(fs, root))
+    DirectParquet.listSegments(conf, LogSegmentSource.resolveMessagesDir(fs, root))
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -257,14 +207,14 @@ private class LogSegmentScanBuilder(root: String)
 
 private class LogSegmentScan(
     root: String,
-    allSegments: Seq[LogSegmentSource.Segment],
+    allSegments: Seq[DirectParquet.Segment],
     required: StructType,
     pushed: Array[Filter],
     limit: Int,
     aggSchema: Option[StructType])
   extends Scan with Batch with SupportsReportStatistics {
 
-  private lazy val segments: Seq[LogSegmentSource.Segment] = {
+  private lazy val segments: Seq[DirectParquet.Segment] = {
     val (lo, hi) = LogSegmentSource.positionBounds(pushed.toSeq)
     allSegments.filter(s => s.maxPos >= lo && s.minPos <= hi)
   }
@@ -298,13 +248,13 @@ private class LogSegmentScan(
         if (segments.isEmpty) null else java.lang.Long.valueOf(segments.map(_.maxPos).max)
       Array(LogFooterAggPartition(s.fieldNames, minPos, maxPos, rows))
     case None =>
-      segments.map(s => LogSegmentPartition(s.path, required.fieldNames, limit): InputPartition).toArray
+      segments.map(s => LogSegmentPartition(s.path, s.bytes, required.fieldNames, limit): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new LogSegmentReaderFactory
 }
 
-private case class LogSegmentPartition(path: String, columns: Array[String], limit: Int)
+private case class LogSegmentPartition(path: String, bytes: Long, columns: Array[String], limit: Int)
   extends InputPartition
 
 /** The footer-derived answer to a fully-pushed aggregation: one row,
@@ -329,66 +279,41 @@ private class LogSegmentReaderFactory extends PartitionReaderFactory {
     case p: LogSegmentPartition => createRowReader(p)
   }
 
+  /** Rows through the store's own segment decoder
+    * ([[graft.store.DirectParquet.read]]), converted to the pruned
+    * columns. */
   private def createRowReader(p: LogSegmentPartition): PartitionReader[InternalRow] = {
-    val conf = new Configuration()
-    val fileSchema = {
-      val fr = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.path), conf))
-      try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-    }
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      LogSegmentSource.parquetProjection(fileSchema, p.columns).toString)
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), new HPath(p.path))
-      .withConf(conf)
-      .build()
-
-    // generations Spark compacted under its default INT96 timestamp
-    // encoding (before the store pinned TIMESTAMP_MICROS) carry
-    // createdUtc as a 12-byte julian-day binary — detect once per file
-    val createdIsInt96 = p.columns.contains("createdUtc") &&
-      fileSchema.containsField("createdUtc") &&
-      fileSchema.getType(fileSchema.getFieldIndex("createdUtc")).asPrimitiveType()
-        .getPrimitiveTypeName ==
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
-
-    def int96Micros(g: Group, name: String): Long = {
-      val bytes = g.getInt96(name, 0).getBytes // little-endian: 8B nanos-of-day, 4B julian day
-      val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val nanosOfDay = buf.getLong
-      val julianDay = buf.getInt
-      (julianDay - 2440588L) * 86400L * 1000000L + nanosOfDay / 1000L
-    }
+    val path = new HPath(p.path)
+    val conf = LogSegmentSource.conf
+    val rows = DirectParquet.read(conf,
+      DirectParquet.inputFile(path.getFileSystem(conf), path, p.bytes), p.columns.toSeq, None)
 
     new PartitionReader[InternalRow] {
-      private var current: Group = _
+      private var current: MessageRow = _
       private var emitted = 0L
 
       override def next(): Boolean = {
-        if (p.limit >= 0 && emitted >= p.limit) return false
-        current = reader.read()
-        if (current != null) emitted += 1
-        current != null
+        if (p.limit >= 0 && emitted >= p.limit || !rows.hasNext) return false
+        current = rows.next()
+        emitted += 1
+        true
       }
 
       override def get(): InternalRow = {
-        val values = new Array[Any](p.columns.length)
-        var i = 0
-        while (i < p.columns.length) {
-          val name = p.columns(i)
-          values(i) =
-            if (current.getFieldRepetitionCount(name) == 0) null
-            else name match {
-              case "streamVersion" => current.getInteger(name, 0)
-              case "createdUtc" if createdIsInt96 => int96Micros(current, name)
-              case "position" | "createdUtc" => current.getLong(name, 0)
-              case _ => UTF8String.fromString(current.getString(name, 0))
-            }
-          i += 1
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
+        val r = current
+        InternalRow.fromSeq(p.columns.toIndexedSeq.map {
+          case "streamId" => UTF8String.fromString(r.streamId)
+          case "messageId" => UTF8String.fromString(r.messageId)
+          case "streamVersion" => r.streamVersion
+          case "position" => r.position
+          case "createdUtc" => r.createdMicros
+          case "type" => UTF8String.fromString(r.`type`)
+          case "jsonData" => UTF8String.fromString(r.jsonData)
+          case "jsonMetadata" => UTF8String.fromString(r.jsonMetadata)
+        })
       }
 
-      override def close(): Unit = reader.close()
+      override def close(): Unit = rows.close()
     }
   }
 }

@@ -1,0 +1,257 @@
+package graft.store
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.io.{ColumnIOFactory, InputFile, RecordReader, SeekableInputStream}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+
+import scala.jdk.CollectionConverters._
+
+/** One message-log row as the store holds it on the driver (memtable, WAL,
+  * segment reads). `createdMicros` is microseconds since the epoch, UTC. */
+private[graft] final case class MessageRow(
+    streamId: String, messageId: String, streamVersion: Int, position: Long,
+    createdMicros: Long, `type`: String, jsonData: String, jsonMetadata: String)
+
+/** Driver-local parquet I/O for log segments, without a Spark job.
+  *
+  * [[write]] turns one group-commit window into one sorted segment
+  * (appends are driver-serialized anyway; a job per flush would pay
+  * ~100 ms of scheduling for ~1 ms of IO). The physical schema matches
+  * what Spark's parquet reader maps to `SparkStreamStore.MessageSchema`
+  * (INT64 TIMESTAMP(MICROS, UTC) for createdUtc).
+  *
+  * [[listSegments]] reads the footers into a position zone map and
+  * [[read]] is the one segment decoder: the store's paged reads and the
+  * `LogSegmentSource` DSv2 reader both go through it. It reads any
+  * generation — flushed segments and Spark-written compacted files
+  * (optional fields, INT96 timestamps from before the store pinned
+  * TIMESTAMP_MICROS) — skips row groups and pages whose position stats
+  * miss the predicate, and materializes only the rows that match. */
+private[graft] object DirectParquet {
+  import org.apache.parquet.schema.Types.{buildMessage => newSchema}
+
+  val Schema: MessageType = newSchema()
+    .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("streamId")
+    .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("messageId")
+    .required(PrimitiveTypeName.INT32).named("streamVersion")
+    .required(PrimitiveTypeName.INT64).named("position")
+    .required(PrimitiveTypeName.INT64)
+    .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)).named("createdUtc")
+    .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("type")
+    .optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("jsonData")
+    .optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("jsonMetadata")
+    .named("graft_messages")
+
+  val AllColumns: Seq[String] = Schema.getFields.asScala.map(_.getName).toSeq
+
+  /** Rows per data page: the page index then lets a point or short-range
+    * read decode a few pages per column instead of the whole segment. */
+  private val PageRows = 256
+
+  def write(conf: Configuration, path: HPath, rows: Seq[MessageRow]): Unit = {
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(path, conf))
+      .withType(Schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withPageRowCountLimit(PageRows)
+      .build()
+    val factory = new SimpleGroupFactory(Schema)
+    try rows.foreach { r =>
+      val g = factory.newGroup()
+      g.append("streamId", r.streamId)
+      g.append("messageId", r.messageId)
+      g.append("streamVersion", r.streamVersion)
+      g.append("position", r.position)
+      g.append("createdUtc", r.createdMicros)
+      g.append("type", r.`type`)
+      if (r.jsonData != null) g.append("jsonData", r.jsonData)
+      if (r.jsonMetadata != null) g.append("jsonMetadata", r.jsonMetadata)
+      writer.write(g)
+    } finally writer.close()
+  }
+
+  /** One log segment with its footer-derived zone map. */
+  final case class Segment(path: String, bytes: Long, rows: Long, minPos: Long, maxPos: Long)
+
+  /** List the segments of one messages generation and read each footer
+    * ONCE for exact position min/max + row count. Driver-side metadata
+    * pass, one footer IO per segment: the store's zone map and
+    * `LogSegmentSource`'s planning-time pruning both come from it. */
+  def listSegments(conf: Configuration, dir: String): Seq[Segment] = {
+    val fs = new HPath(dir).getFileSystem(conf)
+    if (!fs.exists(new HPath(dir))) return Seq.empty
+    fs.listStatus(new HPath(dir)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        try {
+          val footer = reader.getFooter
+          var rows = 0L
+          var minPos = Long.MaxValue
+          var maxPos = Long.MinValue
+          val posIdx = footer.getFileMetaData.getSchema.getFieldIndex("position")
+          footer.getBlocks.asScala.foreach { block =>
+            rows += block.getRowCount
+            val stats: org.apache.parquet.column.statistics.Statistics[_] =
+              block.getColumns.get(posIdx).getStatistics
+            if (stats != null && stats.hasNonNullValue) {
+              minPos = math.min(minPos, stats.genericGetMin.asInstanceOf[java.lang.Long])
+              maxPos = math.max(maxPos, stats.genericGetMax.asInstanceOf[java.lang.Long])
+            }
+          }
+          // a segment with no stats (shouldn't happen: position is required)
+          // gets an infinite range so it is never wrongly pruned
+          if (minPos > maxPos) { minPos = Long.MinValue; maxPos = Long.MaxValue }
+          Segment(st.getPath.toString, st.getLen, rows, minPos, maxPos)
+        } finally reader.close()
+      }
+  }
+
+  /** A segment file opened through an existing FileSystem instance, with
+    * its length known from the zone map — no per-open filesystem lookup
+    * or status call. */
+  def inputFile(fs: FileSystem, path: HPath, length: Long): InputFile = new InputFile {
+    override def getLength: Long = length
+    override def newStream(): SeekableInputStream = HadoopStreams.wrap(fs.open(path))
+  }
+
+  private val Position = FilterApi.longColumn("position")
+
+  /** Rows with `lo <= position <= hi`. */
+  def positionRange(lo: Long, hi: Long): FilterPredicate =
+    FilterApi.and(
+      FilterApi.gtEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(lo)),
+      FilterApi.ltEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(hi)))
+
+  /** Rows whose position is one of `positions`. */
+  def positionIn(positions: Iterable[Long]): FilterPredicate =
+    FilterApi.in[java.lang.Long, Operators.LongColumn](Position,
+      positions.iterator.map(java.lang.Long.valueOf).toSet.asJava)
+
+  /** A decoded segment: rows in file order, closed by the caller. */
+  trait Rows extends Iterator[MessageRow] with AutoCloseable
+
+  /** Decode the `columns` of one segment (columns absent from the file
+    * and unprojected ones come back null / 0), keeping rows that match
+    * `filter`. `conf` is the caller's long-lived configuration: the read
+    * options are derived from it per open (they own a codec factory that
+    * closing the reader releases), never from a freshly loaded Hadoop
+    * configuration, which re-parses its resource files. */
+  def read(conf: Configuration, file: InputFile, columns: Seq[String],
+      filter: Option[FilterPredicate]): Rows = {
+    val compat = filter.map(FilterCompat.get).getOrElse(FilterCompat.NOOP)
+    val options = HadoopReadOptions.builder(conf).withRecordFilter(compat).build()
+    val reader = ParquetFileReader.open(file, options)
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      val fileSchema = meta.getSchema
+      val projection = projectionOf(fileSchema, columns.filter(fileSchema.containsField))
+      reader.setRequestedSchema(projection)
+      val columnIO = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(projection, fileSchema, true)
+      new Rows {
+        private var records: RecordReader[MessageRow] = _
+        private var left = 0L
+        private var nextRow: MessageRow = _
+        private var done = false
+
+        override def hasNext: Boolean = {
+          while (nextRow == null && !done) {
+            if (left > 0) {
+              left -= 1
+              nextRow = records.read() // null: filtered out
+            } else {
+              val pages = reader.readNextFilteredRowGroup()
+              if (pages == null) done = true
+              else {
+                records = columnIO.getRecordReader(pages, new RowMaterializer(projection), compat)
+                left = pages.getRowCount
+              }
+            }
+          }
+          nextRow != null
+        }
+
+        override def next(): MessageRow = {
+          if (!hasNext) throw new NoSuchElementException
+          val r = nextRow
+          nextRow = null
+          r
+        }
+
+        override def close(): Unit = reader.close()
+      }
+    } catch { case t: Throwable => reader.close(); throw t }
+  }
+
+  /** Parquet projection for `columns`, built from the FILE's own schema so
+    * field repetition matches exactly (the direct writer marks required
+    * fields `required`; Spark-written compacted generations may mark the
+    * same fields `optional` — parquet's projection check demands the
+    * requested repetition agree). */
+  private def projectionOf(fileSchema: MessageType, columns: Seq[String]): MessageType =
+    new MessageType(fileSchema.getName,
+      columns.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
+
+  /** Builds a [[MessageRow]] per record straight from the column values. */
+  private final class RowMaterializer(schema: MessageType) extends RecordMaterializer[MessageRow] {
+    private var streamId, messageId, tpe, jsonData, jsonMetadata: String = _
+    private var version = 0
+    private var position, created = 0L
+
+    private def string(set: String => Unit): Converter = new PrimitiveConverter {
+      override def addBinary(v: Binary): Unit = set(v.toStringUsingUTF8)
+    }
+
+    private val converters: Array[Converter] = schema.getFields.asScala.map { f =>
+      f.getName match {
+        case "streamId" => string(streamId = _)
+        case "messageId" => string(messageId = _)
+        case "type" => string(tpe = _)
+        case "jsonData" => string(jsonData = _)
+        case "jsonMetadata" => string(jsonMetadata = _)
+        case "streamVersion" => new PrimitiveConverter {
+          override def addInt(v: Int): Unit = version = v
+        }
+        case "position" => new PrimitiveConverter {
+          override def addLong(v: Long): Unit = position = v
+        }
+        case "createdUtc" => new PrimitiveConverter {
+          override def addLong(v: Long): Unit = created = v
+          // generations Spark compacted under its default INT96 encoding
+          // carry a 12-byte julian-day value: 8B nanos-of-day, 4B day (LE)
+          override def addBinary(v: Binary): Unit = {
+            val buf = v.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            val nanosOfDay = buf.getLong
+            val julianDay = buf.getInt
+            created = (julianDay - 2440588L) * 86400L * 1000000L + nanosOfDay / 1000L
+          }
+        }
+        case other => throw new IllegalArgumentException(s"not a message-log column: $other")
+      }
+    }.toArray
+
+    private val root = new GroupConverter {
+      override def getConverter(i: Int): Converter = converters(i)
+      override def start(): Unit = {
+        streamId = null; messageId = null; tpe = null; jsonData = null; jsonMetadata = null
+        version = 0; position = 0L; created = 0L
+      }
+      override def end(): Unit = ()
+    }
+
+    override def getRootConverter: GroupConverter = root
+    override def getCurrentRecord: MessageRow =
+      MessageRow(streamId, messageId, version, position, created, tpe, jsonData, jsonMetadata)
+  }
+}

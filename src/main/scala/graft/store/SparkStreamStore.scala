@@ -5,12 +5,7 @@ import graft.core._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,14 +27,15 @@ import scala.collection.mutable
   *
   * Write path (group commit): each append is made durable by a single
   * buffered write + flush to an open WAL file (`wal/`, JSON lines) and
-  * buffered in a driver-side memtable that reads union into their scan —
+  * buffered in a driver-side memtable that every read also sees —
   * the single-writer twin of the reference's one-round-trip batch insert
   * (`AppendToStream.sql:100-113`), with the RDBMS's WAL group commit
   * standing in for its transaction log. The memtable is flushed to ONE
   * sorted parquet segment per window (`flushEveryRows`/`flushEveryBytes`,
   * [[flush]], [[compact]], [[close]]), which amortizes the parquet
   * writer+footer cost (~27 ms/file) across the window; parquet min/max
-  * stats give position-range skipping on the read side. Recovery replays
+  * stats, held per file in a driver zone map, give position-range
+  * skipping on the read side. Recovery replays
   * WAL rows above the last flushed segment, so durability is per-append,
   * not per-flush.
   *
@@ -52,11 +48,19 @@ import scala.collection.mutable
   * Concurrency model: all mutation is serialized through `this` (single
   * logical writer) — the consistency boundary the reference obtains from
   * DB transactions ("the stream as the consistency and transaction
-  * boundary", reference README.md:25). Reads snapshot driver state under
-  * the lock but run their Spark jobs outside it, so subscription polling
-  * does not contend with appends; only [[compact]] (which swaps files)
-  * excludes readers, via a read-write structure lock. ACROSS processes
-  * the same invariant is enforced by an exclusive [[WriterLease]]
+  * boundary", reference README.md:25). Paged reads run no Spark job: under
+  * the lock a read only copies immutable references — the segment zone
+  * map, the memtable, the delete state and, for a stream read, the id
+  * chain that holds the positions of its visible messages — then picks
+  * its O(page) rows outside the lock, from the memtable and from the
+  * parquet segments the zone map names (decoded on the driver by
+  * [[DirectParquet.read]]), so subscription polling does not contend
+  * with appends. A cold chain costs one Spark query, also outside the
+  * lock. Spark serves the analytical surfaces ([[allMessages]],
+  * `LogSegmentSource`, [[allMessagesStream]]). Only [[compact]] (which
+  * swaps files) excludes readers, via a read-write structure lock.
+  * ACROSS processes the same invariant is enforced by an exclusive
+  * [[WriterLease]]
   * (`<root>/LOCK`, heartbeat + fencing epoch): a second store opening
   * the same root fails loudly (strict mode, the default — a healthy
   * live writer is never fenced) or, under explicit takeover opt-in
@@ -82,7 +86,6 @@ final class SparkStreamStore(
     rootDir: String,
     clock: Clock = Clock.System,
     trackDeletes: Boolean = true,
-    scavengeSynchronously: Boolean = true, // retained for API compatibility; scavenge is now always a cheap synchronous tombstone write
     journalEvery: Int = 64,
     maxCachedChain: Int = 100000,
     autoCompactEvery: Int = 0, // >0: background-compact after that many flushed log segments
@@ -131,9 +134,10 @@ final class SparkStreamStore(
   private val writeFs = FileSystem.newInstance(new java.net.URI(root), writeConf)
 
   /** Group-commit state: rows durable in the WAL but not yet flushed to a
-    * parquet segment. Reads union the memtable into their scan, so buffered
-    * rows are immediately visible through every read surface. */
-  private val memtable = mutable.ArrayBuffer.empty[MessageRow]
+    * parquet segment, at the consecutive positions just below
+    * `nextPosition`. Every read surface sees them at once. An immutable
+    * value, so a read snapshots it by reference. */
+  private var memtable = Vector.empty[MessageRow]
   private var memtableBytes = 0L
   private var walOut: Option[org.apache.hadoop.fs.FSDataOutputStream] = None
 
@@ -164,13 +168,20 @@ final class SparkStreamStore(
   private var nextPosition: Long = Position.Start
   private var nextIdInternal: Long = 0L
 
-  // logical-delete state, mirrored in tombstones/ (merged by compact):
+  // logical-delete state, mirrored in tombstones/ (merged by compact);
+  // immutable values, so a read's snapshot is three reference copies:
   // streamId -> all rows with position <= asOf are deleted
-  private val streamTombs = mutable.Map.empty[String, Long]
+  private var streamTombs = Map.empty[String, Long]
   // exact positions of individually deleted messages
-  private val msgTombs = mutable.Set.empty[Long]
+  private var msgTombs = Set.empty[Long]
   // streamId -> (version ceiling, asOf position): scavenged prefix
-  private val cutoffs = mutable.Map.empty[String, (Int, Long)]
+  private var cutoffs = Map.empty[String, (Int, Long)]
+
+  /** Zone map of the live generation's segments: path, length, row count
+    * and position min/max per file, from the footers at [[recover]],
+    * extended by [[flushMemtable]], rebuilt by [[compact]]. Paged reads
+    * pick the files a position range touches from it. */
+  private var segments = Vector.empty[DirectParquet.Segment]
 
   /** Per-stream in-order (version, messageId, position) chains backing
     * the idempotency replay checks and message-id -> position resolution
@@ -206,9 +217,10 @@ final class SparkStreamStore(
     * the capped stream re-scavenges past the lost cutoff. */
   private val pendingCutoffs = mutable.Map.empty[String, Tomb]
 
-  /** Readers hold the read side while a Spark job runs; [[compact]] (the
-    * only file-swapping operation) holds the write side. Ordering: the
-    * structure lock is always acquired BEFORE `this`. */
+  /** Readers hold the read side while they decode segment files (or run
+    * a Spark job); [[compact]] (the only file-swapping operation) holds
+    * the write side. Ordering: the structure lock is always acquired
+    * BEFORE `this`. */
   private val structureLock = new ReentrantReadWriteLock()
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[SparkStreamStore])
@@ -456,10 +468,11 @@ final class SparkStreamStore(
     // lock SYNCHRONOUSLY (not just the heartbeat's cached verdict)
     // before every segment write, so a fenced writer can never publish
     lease.pollNow(); lease.ensureValid()
-    DirectParquet.write(writeConf,
-      new HPath(messagesDir, f"part-${memtable.head.position}%020d-${UUID.randomUUID().toString.take(8)}.parquet"),
-      memtable.toSeq)
-    memtable.clear()
+    val path = new HPath(messagesDir, f"part-${memtable.head.position}%020d-${UUID.randomUUID().toString.take(8)}.parquet")
+    DirectParquet.write(writeConf, path, memtable)
+    segments :+= DirectParquet.Segment(path.toString, writeFs.getFileStatus(path).getLen,
+      memtable.length, memtable.head.position, memtable.last.position)
+    memtable = Vector.empty
     memtableBytes = 0L
     walOut.foreach(_.close())
     walOut = None
@@ -494,7 +507,7 @@ final class SparkStreamStore(
     val cutoff = head.version - maxCount // keep versions > cutoff
     if (cutoff >= 0 && cutoffs.get(streamId).forall(_._1 < cutoff)) {
       val asOf = nextPosition - 1
-      cutoffs(streamId) = (cutoff, asOf)
+      cutoffs += streamId -> (cutoff, asOf)
       pendingCutoffs(streamId) = Tomb("cutoff", streamId, -1L, cutoff, asOf)
       chainGet(streamId).foreach(c => cacheChain(streamId, c.filter(_._1 > cutoff)))
     }
@@ -514,25 +527,32 @@ final class SparkStreamStore(
     chainGet(streamId) match {
       case Some(c) => c
       case None =>
-        val chain = messagesDF
-          .filter(col("streamId") === streamId)
-          .select("streamVersion", "messageId", "position")
-          .orderBy("streamVersion")
-          .collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-          .toIndexedSeq
+        val chain = loadChain(messagesDF, streamId)
         cacheChain(streamId, chain)
         chain
     }
+
+  /** The cold-chain query: one Spark job over the logical log, sorted on
+    * the driver (a distributed sort would add a sampling job). */
+  private def loadChain(df: DataFrame, streamId: String): IndexedSeq[(Int, String, Long)] =
+    df.filter(col("streamId") === streamId)
+      .select("streamVersion", "messageId", "position")
+      .collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .sortBy(_._1)
+      .toIndexedSeq
 
   // ------------------------------------------------------------------
   // Reads (ref: ReadAll.sql, Read.sql, ReadonlyStreamStoreBase.cs)
   // ------------------------------------------------------------------
 
-  /** The physical log: flushed parquet segments ∪ the in-memory group-commit
-    * window (a LocalRelation of at most `flushEveryRows` rows — filters on
-    * the parquet side still push down; the memtable side is filtered
-    * in-memory). Callers must hold `this` (the memtable snapshot and the
+  /** The physical log as a DataFrame: flushed parquet segments ∪ the
+    * in-memory group-commit window (a LocalRelation of at most
+    * `flushEveryRows` rows — filters on the parquet side still push down;
+    * the memtable side is filtered in-memory). Only the Spark surfaces use
+    * it — [[allMessages]], [[compact]], recovery's [[reconcileTail]] and
+    * the cold id-chain load; paged reads decode segments on the driver
+    * instead. Callers must hold `this` (the memtable snapshot and the
     * segment listing must be consistent). */
   private def rawMessagesDF: DataFrame = {
     val base =
@@ -545,9 +565,8 @@ final class SparkStreamStore(
   private def memtableRows(): java.util.List[Row] = {
     val out = new java.util.ArrayList[Row](memtable.length)
     memtable.foreach { r =>
-      val ts = new java.sql.Timestamp(Math.floorDiv(r.createdMicros, 1000000L) * 1000L)
-      ts.setNanos((Math.floorMod(r.createdMicros, 1000000L) * 1000L).toInt)
-      out.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, ts, r.`type`, r.jsonData, r.jsonMetadata))
+      out.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, timestampOf(r.createdMicros),
+        r.`type`, r.jsonData, r.jsonMetadata))
     }
     out
   }
@@ -607,16 +626,6 @@ final class SparkStreamStore(
     try f finally l.unlock()
   }
 
-  private def toMessages(rows: Array[Row], prefetch: Boolean): Seq[StreamMessage] =
-    rows.iterator.map { r =>
-      StreamMessage(
-        streamId = r.getString(0), messageId = r.getString(1),
-        streamVersion = r.getInt(2), position = r.getLong(3),
-        createdUtc = r.getTimestamp(4), `type` = r.getString(5),
-        jsonData = if (prefetch) r.getString(6) else null,
-        jsonMetadata = r.getString(7))
-    }.toSeq
-
   /** TTL filter, applied post-read on the driver exactly like the reference
     * (`ReadonlyStreamStoreBase.cs:394-490`): expired messages are dropped
     * from the page and queued for one BATCHED background purge; `$` streams
@@ -659,19 +668,162 @@ final class SparkStreamStore(
     }
   }
 
+  private def toMessage(r: MessageRow, prefetch: Boolean): StreamMessage =
+    StreamMessage(r.streamId, r.messageId, r.streamVersion, r.position, timestampOf(r.createdMicros),
+      r.`type`, if (prefetch) r.jsonData else null, r.jsonMetadata)
+
+  /** Callers hold `this`. */
+  private def readView(): ReadView =
+    new ReadView(segments, memtable, nextPosition, streamTombs, msgTombs, cutoffs)
+
+  /** Decode the rows matching `filter` from every segment `touches`
+    * selects, in position order. Runs outside `this`. */
+  private def segmentRows(view: ReadView, touches: DirectParquet.Segment => Boolean,
+      filter: FilterPredicate, prefetch: Boolean): collection.IndexedSeq[MessageRow] = {
+    val columns = if (prefetch) DirectParquet.AllColumns else DirectParquet.AllColumns.filterNot(_ == "jsonData")
+    val hits = view.segments.filter(s => s.rows > 0 && touches(s))
+    val out = mutable.ArrayBuffer.empty[MessageRow]
+    hits.foreach { s =>
+      val rows = DirectParquet.read(writeConf,
+        DirectParquet.inputFile(writeFs, new HPath(s.path), s.bytes), columns, Some(filter))
+      try rows.foreach(out += _) finally rows.close()
+    }
+    out.sortInPlaceBy(_.position) // a stream-clustered file is not in position order
+    out
+  }
+
+  private def rangeRows(view: ReadView, lo: Long, hi: Long, prefetch: Boolean): collection.IndexedSeq[MessageRow] =
+    segmentRows(view, s => s.maxPos >= lo && s.minPos <= hi, DirectParquet.positionRange(lo, hi), prefetch)
+
+  /** The first `want` visible rows at positions >= `from`, ascending.
+    * Positions are dense, so a window of `want` positions usually holds
+    * the page; deleted or compacted-away rows widen the next window, and
+    * a window never starts in a gap no segment covers. */
+  private def pageForward(view: ReadView, from: Long, want: Int, prefetch: Boolean): collection.IndexedSeq[MessageRow] = {
+    val out = mutable.ArrayBuffer.empty[MessageRow]
+    var cursor = from
+    var span = want.toLong
+    def nextCovered(): Unit =
+      view.segments.iterator.filter(s => s.rows > 0 && s.maxPos >= cursor).map(_.minPos).minOption match {
+        case Some(p) => cursor = math.max(cursor, p)
+        case None => cursor = math.max(cursor, view.memStart)
+      }
+    nextCovered()
+    while (out.length < want && cursor < view.memStart) {
+      val hi = if (view.memStart - cursor <= span) view.memStart - 1 else cursor + span - 1
+      out ++= rangeRows(view, cursor, hi, prefetch).iterator.filter(view.visible).take(want - out.length)
+      cursor = hi + 1
+      span = math.min(span * 2, MaxWindow)
+      nextCovered()
+    }
+    var i = math.max(cursor, view.memStart) - view.memStart
+    while (out.length < want && i < view.memtable.length) {
+      val r = view.memtable(i.toInt)
+      if (view.visible(r)) out += r
+      i += 1
+    }
+    out
+  }
+
+  /** The first `want` visible rows at positions <= `from`, descending. */
+  private def pageBackward(view: ReadView, from: Long, want: Int, prefetch: Boolean): collection.IndexedSeq[MessageRow] = {
+    val out = mutable.ArrayBuffer.empty[MessageRow]
+    var cursor = math.min(from, view.end - 1)
+    var i = cursor - view.memStart
+    while (out.length < want && i >= 0) {
+      val r = view.memtable(i.toInt)
+      if (view.visible(r)) out += r
+      i -= 1
+    }
+    cursor = math.min(cursor, view.memStart - 1)
+    var span = want.toLong
+    def prevCovered(): Boolean =
+      view.segments.iterator.filter(s => s.rows > 0 && s.minPos <= cursor).map(_.maxPos).maxOption match {
+        case Some(p) => cursor = math.min(cursor, p); true
+        case None => false
+      }
+    while (out.length < want && cursor >= 0 && prevCovered()) {
+      val lo = if (cursor < span) 0L else cursor - span + 1
+      out ++= rangeRows(view, lo, cursor, prefetch).reverseIterator.filter(view.visible).take(want - out.length)
+      cursor = lo - 1
+      span = math.min(span * 2, MaxWindow)
+    }
+    out
+  }
+
+  /** The stream's [[StreamView]], or None if it does not exist. A warm
+    * chain costs one O(1) snapshot under `this`. A cold one is loaded by
+    * one Spark job outside `this` and cached only if neither the stream
+    * nor the delete state moved meanwhile; otherwise it is reloaded under
+    * `this`, as an append would. A caller that already holds `this`
+    * (`synchronized` is reentrant) loads a cold chain under it. */
+  private def streamView(streamId: String): Option[StreamView] = {
+    val snap = synchronized {
+      heads.get(streamId).map { h =>
+        val v = readView()
+        chainGet(streamId) match {
+          case Some(c) => Left(StreamView(h.version, h.position, c, v))
+          case None => Right((h.idInternal, h.version, v, messagesDF))
+        }
+      }
+    }
+    snap.map {
+      case Left(s) => Some(s)
+      case Right((idInternal, version, before, df)) =>
+        val loaded = loadChain(df, streamId)
+        synchronized {
+          heads.get(streamId).map { h =>
+            val v = readView()
+            val chain =
+              if (h.idInternal == idInternal && h.version == version && v.sameDeletes(before) &&
+                  chainGet(streamId).isEmpty) {
+                cacheChain(streamId, loaded)
+                loaded
+              } else existingIds(streamId)
+            StreamView(h.version, h.position, chain, v)
+          }
+        }
+    }.flatten
+  }
+
+  /** Index of the first chain entry with version >= `v` (chains are
+    * version-ordered). */
+  private def chainIndex(chain: IndexedSeq[(Int, String, Long)], v: Int): Int = {
+    var lo = 0
+    var hi = chain.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (chain(mid)._1 < v) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** The rows behind `entries` of `s.chain`, in entry order. The chain
+    * holds exactly the stream's visible rows, so a position found in
+    * neither the memtable nor a segment is corruption, not a delete. */
+  private def chainRows(s: StreamView, entries: Seq[(Int, String, Long)], prefetch: Boolean): Seq[MessageRow] = {
+    val view = s.view
+    val (inMem, inSeg) = entries.map(_._3).partition(_ >= view.memStart)
+    val byPos = mutable.HashMap.empty[Long, MessageRow]
+    inMem.foreach(p => byPos(p) = view.memtable((p - view.memStart).toInt))
+    if (inSeg.nonEmpty) {
+      val wanted = inSeg.toSet
+      segmentRows(view, seg => inSeg.exists(p => p >= seg.minPos && p <= seg.maxPos),
+        DirectParquet.positionIn(wanted), prefetch).foreach(r => byPos(r.position) = r)
+    }
+    entries.map { case (_, _, p) =>
+      byPos.getOrElse(p, throw new IllegalStateException(s"$root: position $p of the id chain is in no segment"))
+    }.filter(view.visible)
+  }
+
   override def readAllForwards(from: Long, maxCount: Int, prefetch: Boolean): ReadAllPage = withReadLock {
     require(maxCount > 0)
     val fromPos = if (from == Position.End) Long.MaxValue else from
-    val df = synchronized(messagesDF)
-    val rows = df
-      .filter(col("position") >= fromPos)
-      .orderBy(col("position"))
-      .limit(maxCount + 1)
-      .collect()
+    val rows = pageForward(synchronized(readView()), fromPos, pageWant(maxCount), prefetch)
     val isEnd = rows.length <= maxCount
-    val page = toMessages(rows.take(maxCount), prefetch)
+    val page = rows.iterator.take(maxCount).map(toMessage(_, prefetch)).toSeq
     val nextPos =
-      if (!isEnd) rows(maxCount).getLong(3)
+      if (!isEnd) rows(maxCount).position
       else if (page.nonEmpty) page.last.position + 1
       else fromPos
     val kept = filterExpired(page)
@@ -684,12 +836,7 @@ final class SparkStreamStore(
     // End sentinel => start from the largest position (ref:
     // PostgresStreamStore.ReadAll.cs:94 uses long.MaxValue)
     val fromPos = if (from == Position.End) Long.MaxValue else from
-    val df = synchronized(messagesDF)
-    val rows = df
-      .filter(col("position") <= fromPos)
-      .orderBy(col("position").desc)
-      .limit(maxCount + 1)
-      .collect()
+    val rows = pageBackward(synchronized(readView()), fromPos, pageWant(maxCount), prefetch)
     if (rows.isEmpty)
       // nothing at or below `from`: next is Start regardless of input
       // (ref: ReadAll.cs:109-119)
@@ -697,9 +844,9 @@ final class SparkStreamStore(
         ReadDirection.Backward, Nil,
         () => readAllBackwards(Position.Start, maxCount, prefetch))
     val isEnd = rows.length <= maxCount
-    val page = toMessages(rows.take(maxCount), prefetch)
+    val page = rows.iterator.take(maxCount).map(toMessage(_, prefetch)).toSeq
     val nextPos =
-      if (!isEnd) rows(maxCount).getLong(3)
+      if (!isEnd) rows(maxCount).position
       else Position.Start // exhausted
     val kept = filterExpired(page)
     // the page reports the RESOLVED start: its first message's position
@@ -711,54 +858,49 @@ final class SparkStreamStore(
 
   override def readStreamForwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = withReadLock {
     require(maxCount > 0)
-    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position, messagesDF)))
-    snap match {
+    streamView(streamId) match {
       case None =>
         ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
           StreamVersion.End, Position.End, ReadDirection.Forward, isEnd = true, Nil,
           () => readStreamForwards(streamId, fromVersion, maxCount, prefetch))
-      case Some((headVersion, headPosition, df)) =>
-        val fromV = math.max(fromVersion, 0)
-        val rows = df
-          .filter(col("streamId") === streamId && col("streamVersion") >= fromV)
-          .orderBy(col("streamVersion"))
-          .limit(maxCount + 1)
-          .collect()
+      case Some(s) =>
+        val start = chainIndex(s.chain, math.max(fromVersion, 0))
+        val end = math.min(s.chain.length.toLong, start.toLong + pageWant(maxCount)).toInt
+        val rows = chainRows(s, (start until end).map(s.chain), prefetch)
         val isEnd = rows.length <= maxCount
-        val page = toMessages(rows.take(maxCount), prefetch)
+        val page = rows.iterator.take(maxCount).map(toMessage(_, prefetch)).toSeq
         val nextV =
-          if (!isEnd) rows(maxCount).getInt(2)
-          else headVersion + 1
+          if (!isEnd) rows(maxCount).streamVersion
+          else s.version + 1
         val kept = filterExpired(page)
-        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, headVersion,
-          headPosition, ReadDirection.Forward, isEnd, kept,
+        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, s.version,
+          s.position, ReadDirection.Forward, isEnd, kept,
           () => readStreamForwards(streamId, nextV, maxCount, prefetch))
     }
   }
 
   override def readStreamBackwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = withReadLock {
     require(maxCount > 0)
-    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position, messagesDF)))
-    snap match {
+    streamView(streamId) match {
       case None =>
         ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
           StreamVersion.End, Position.End, ReadDirection.Backward, isEnd = true, Nil,
           () => readStreamBackwards(streamId, fromVersion, maxCount, prefetch))
-      case Some((headVersion, headPosition, df)) =>
-        val fromV = if (fromVersion == StreamVersion.End) Int.MaxValue else fromVersion
-        val rows = df
-          .filter(col("streamId") === streamId && col("streamVersion") <= fromV)
-          .orderBy(col("streamVersion").desc)
-          .limit(maxCount + 1)
-          .collect()
+      case Some(s) =>
+        // entries with version <= fromVersion (End = the newest), newest first
+        val top =
+          if (fromVersion == StreamVersion.End || fromVersion == Int.MaxValue) s.chain.length
+          else chainIndex(s.chain, fromVersion + 1)
+        val low = math.max(0L, top.toLong - pageWant(maxCount)).toInt
+        val rows = chainRows(s, (low until top).reverse.map(s.chain), prefetch)
         val isEnd = rows.length <= maxCount
-        val page = toMessages(rows.take(maxCount), prefetch)
+        val page = rows.iterator.take(maxCount).map(toMessage(_, prefetch)).toSeq
         val nextV =
-          if (!isEnd) rows(maxCount).getInt(2)
+          if (!isEnd) rows(maxCount).streamVersion
           else StreamVersion.End
         val kept = filterExpired(page)
-        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, headVersion,
-          headPosition, ReadDirection.Backward, isEnd, kept,
+        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, s.version,
+          s.position, ReadDirection.Backward, isEnd, kept,
           () => readStreamBackwards(streamId, nextV, maxCount, prefetch))
     }
   }
@@ -772,12 +914,12 @@ final class SparkStreamStore(
     synchronized { heads.get(streamId).map(_.version).getOrElse(StreamVersion.End) }
 
   override def readMessageData(streamId: String, streamVersion: Int): Option[String] = withReadLock {
-    synchronized(messagesDF)
-      .filter(col("streamId") === streamId && col("streamVersion") === streamVersion)
-      .select("jsonData")
-      .collect()
-      .headOption
-      .map(_.getString(0))
+    streamView(streamId).flatMap { s =>
+      val i = chainIndex(s.chain, streamVersion)
+      if (i < s.chain.length && s.chain(i)._1 == streamVersion)
+        chainRows(s, Seq(s.chain(i)), prefetch = true).headOption.map(_.jsonData)
+      else None
+    }
   }
 
   // ------------------------------------------------------------------
@@ -812,12 +954,12 @@ final class SparkStreamStore(
     val tombs = Seq(Tomb("stream", streamId, -1L, -1, asOf)) ++
       (if (hadMeta) Seq(Tomb("stream", metaId, -1L, -1, asOf)) else Nil)
     writeTombstones(tombs)
-    streamTombs(streamId) = math.max(streamTombs.getOrElse(streamId, -1L), asOf)
-    if (hadMeta) streamTombs(metaId) = math.max(streamTombs.getOrElse(metaId, -1L), asOf)
+    streamTombs += streamId -> math.max(streamTombs.getOrElse(streamId, -1L), asOf)
+    if (hadMeta) streamTombs += metaId -> math.max(streamTombs.getOrElse(metaId, -1L), asOf)
     writeJournal(Nil, Seq(streamId) ++ (if (hadMeta) Seq(metaId) else Nil))
     Seq(streamId, metaId).foreach { id =>
       heads.remove(id)
-      cutoffs.remove(id); pendingCutoffs.remove(id)
+      cutoffs -= id; pendingCutoffs.remove(id)
       chainRemove(id); dirtyStreams -= id
     }
     if (trackDeletes) {
@@ -896,8 +1038,8 @@ final class SparkStreamStore(
       fs.delete(dst, true) // orphan of a previously crashed attempt
       // pin TIMESTAMP_MICROS for the compacted generation: Spark's
       // default INT96 would diverge from the flushed segments' physical
-      // layout (LogSegmentSource reads both; its INT96 fallback covers
-      // generations compacted before this pin)
+      // layout (DirectParquet.read decodes both; its INT96 fallback
+      // covers generations compacted before this pin)
       val tsKey = "spark.sql.parquet.outputTimestampType"
       val prevTs = spark.conf.getOption(tsKey)
       spark.conf.set(tsKey, "TIMESTAMP_MICROS")
@@ -920,11 +1062,12 @@ final class SparkStreamStore(
       writeCurrent(newGen)
       val oldGen = gen
       gen = newGen
+      loadZoneMap()
       if (oldGen >= 1) fs.delete(new HPath(genDirName(oldGen - 1)), true)
       // tombstones are merged; clearing them after the flip is safe because
       // re-applying a tombstone to the compacted log matches nothing
       fs.delete(new HPath(tombstonesDir), true)
-      streamTombs.clear(); msgTombs.clear(); cutoffs.clear(); pendingCutoffs.clear()
+      streamTombs = Map.empty; msgTombs = Set.empty; cutoffs = Map.empty; pendingCutoffs.clear()
       filesSinceCompact = 0
       writeJournalSquash()
     } finally wl.unlock()
@@ -939,8 +1082,8 @@ final class SparkStreamStore(
   // Metadata (ref: PostgresStreamStore.Metadata.cs:25-52, SetStreamMetadata.sql)
   // ------------------------------------------------------------------
 
-  override def getStreamMetadata(streamId: String): StreamMetadataResult = synchronized {
-    latestMetadataMessage(streamId) match {
+  override def getStreamMetadata(streamId: String): StreamMetadataResult = withReadLock {
+    streamView(MetadataStream.of(streamId)).flatMap(latestOf) match {
       case None => StreamMetadataResult(streamId, StreamVersion.End, None, None, null)
       case Some((version, json)) =>
         val m = MetadataJson.read(json)
@@ -984,20 +1127,12 @@ final class SparkStreamStore(
     }
 
   private def latestMetadata(streamId: String): Option[MetadataMessage] =
-    latestMetadataMessage(streamId).map { case (_, json) => MetadataJson.read(json) }
+    streamView(MetadataStream.of(streamId)).flatMap(latestOf).map { case (_, json) => MetadataJson.read(json) }
 
-  private def latestMetadataMessage(streamId: String): Option[(Int, String)] = {
-    val metaId = MetadataStream.of(streamId)
-    if (!heads.contains(metaId)) None
-    else messagesDF
-      .filter(col("streamId") === metaId)
-      .orderBy(col("streamVersion").desc)
-      .limit(1)
-      .select("streamVersion", "jsonData")
-      .collect()
-      .headOption
-      .map(r => (r.getInt(0), r.getString(1)))
-  }
+  /** The newest visible message of a stream: (version, jsonData). */
+  private def latestOf(s: StreamView): Option[(Int, String)] =
+    s.chain.lastOption.flatMap(e => chainRows(s, Seq(e), prefetch = true).headOption)
+      .map(r => (r.streamVersion, r.jsonData))
 
   // ------------------------------------------------------------------
   // ListStreams (ref: ListStreams.sql, Pattern.cs:7-37)
@@ -1184,7 +1319,12 @@ final class SparkStreamStore(
         .map(_._1).maxOption.getOrElse(0L)
     }
     gens.foreach { case (g, p) => if (g != gen) fs.delete(new HPath(p), true) }
+    loadZoneMap()
   }
+
+  /** One footer read per segment of the live generation. */
+  private def loadZoneMap(): Unit =
+    segments = DirectParquet.listSegments(hadoopConf, messagesDir).toVector
 
   private def listGenDirs(): Seq[(Long, String)] = {
     val rootPath = new HPath(root)
@@ -1242,16 +1382,13 @@ final class SparkStreamStore(
       .map(_.maxBy(_._1)._2).toSeq
       .sortBy(_.position)
     if (winners.nonEmpty) {
-      val maxFlushed: Long =
-        if (!fs.exists(new HPath(messagesDir))) -1L
-        else spark.read.schema(MessageSchema).parquet(messagesDir)
-          .agg(max(col("position"))).collect().headOption
-          .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-          .getOrElse(-1L)
+      val maxFlushed = segments.iterator.filter(_.rows > 0).map(_.maxPos).maxOption.getOrElse(-1L)
       val fresh = winners.filter(_.position > maxFlushed)
-      if (fresh.nonEmpty)
+      if (fresh.nonEmpty) {
         DirectParquet.write(writeConf,
           new HPath(messagesDir, f"part-${fresh.head.position}%020d-recovered.parquet"), fresh)
+        loadZoneMap()
+      }
     }
     fs.delete(dir, true)
   }
@@ -1266,7 +1403,7 @@ final class SparkStreamStore(
       h.maxCount.foreach { mc =>
         val cutoff = h.version - mc
         if (cutoff >= 0 && cutoffs.get(id).forall(_._1 < cutoff)) {
-          cutoffs(id) = (cutoff, nextPosition - 1)
+          cutoffs += id -> (cutoff, nextPosition - 1)
           pendingCutoffs(id) = Tomb("cutoff", id, -1L, cutoff, nextPosition - 1)
         }
       }
@@ -1349,11 +1486,11 @@ final class SparkStreamStore(
         case "message" => msgTombs += n.get("position").asLong
         case "stream" =>
           val id = n.get("streamId").asText
-          streamTombs(id) = math.max(streamTombs.getOrElse(id, -1L), n.get("asOf").asLong)
+          streamTombs += id -> math.max(streamTombs.getOrElse(id, -1L), n.get("asOf").asLong)
         case "cutoff" =>
           val id = n.get("streamId").asText
           val c = n.get("ceiling").asInt
-          if (cutoffs.get(id).forall(_._1 < c)) cutoffs(id) = (c, n.get("asOf").asLong)
+          if (cutoffs.get(id).forall(_._1 < c)) cutoffs += id -> (c, n.get("asOf").asLong)
         case _ => ()
       }
     }
@@ -1485,7 +1622,7 @@ final class SparkStreamStore(
         // this writer's zombie WAL, which loses by epoch at recovery)
         log.warn(s"graft: close() on a FENCED store for $root — buffered " +
           s"rows are discarded, the lease winner owns the log")
-        memtable.clear(); memtableBytes = 0L
+        memtable = Vector.empty; memtableBytes = 0L
       }
       walOut.foreach(_.close())
       walOut = None
@@ -1497,6 +1634,45 @@ final class SparkStreamStore(
 }
 
 object SparkStreamStore {
+  /** What one paged read sees, taken under `this` in O(1): the zone map,
+    * the memtable and the delete state, all immutable values. The
+    * memtable holds exactly the positions `memStart until end`; every
+    * lower position is in a segment or was compacted away. */
+  private final class ReadView(
+      val segments: Vector[DirectParquet.Segment],
+      val memtable: Vector[MessageRow],
+      val end: Long,
+      val streamTombs: Map[String, Long],
+      val msgTombs: Set[Long],
+      val cutoffs: Map[String, (Int, Long)]) {
+    val memStart: Long = memtable.headOption.map(_.position).getOrElse(end)
+
+    /** `messagesDF`'s stream-tombstone, cutoff and message-tombstone
+      * filters, row by row. */
+    def visible(r: MessageRow): Boolean =
+      !msgTombs.contains(r.position) &&
+        streamTombs.get(r.streamId).forall(r.position > _) &&
+        cutoffs.get(r.streamId).forall { case (ceil, asOf) => r.streamVersion > ceil || r.position > asOf }
+
+    def sameDeletes(o: ReadView): Boolean =
+      (streamTombs eq o.streamTombs) && (msgTombs eq o.msgTombs) && (cutoffs eq o.cutoffs)
+  }
+
+  /** A stream's head and id chain with a read view, all from one moment. */
+  private final case class StreamView(version: Int, position: Long, chain: IndexedSeq[(Int, String, Long)], view: ReadView)
+
+  /** Largest position window one paged-read step decodes. */
+  private val MaxWindow = 1L << 20
+
+  /** Rows a page fetches: one beyond the page tells whether it is the end. */
+  private def pageWant(maxCount: Int): Int = if (maxCount == Int.MaxValue) maxCount else maxCount + 1
+
+  private def timestampOf(micros: Long): java.sql.Timestamp = {
+    val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+    ts
+  }
+
   /** Global budget of cached id-chain tuples across ALL streams (~100 B
     * each ≈ 100 MB ceiling); least-recently-touched chains evict first. */
   private val MaxChainCacheEntries = 1000000L
@@ -1537,49 +1713,4 @@ object SparkStreamStore {
   private val Mapper = new ObjectMapper()
 
   private final case class Tomb(kind: String, streamId: String, position: Long, ceiling: Int, asOf: Long)
-
-  private final case class MessageRow(
-      streamId: String, messageId: String, streamVersion: Int, position: Long,
-      createdMicros: Long, `type`: String, jsonData: String, jsonMetadata: String)
-
-  /** Driver-local parquet writer for append batches: one small sorted file
-    * per append, written without a Spark job (appends are driver-serialized
-    * anyway; a job per 100-row batch would pay ~100ms scheduling for ~1ms
-    * of IO). The physical schema matches what Spark's parquet reader maps
-    * to [[MessageSchema]] (INT64 TIMESTAMP(MICROS, UTC) for createdUtc). */
-  private object DirectParquet {
-    import org.apache.parquet.schema.Types.{buildMessage => newSchema}
-
-    val Schema: MessageType = newSchema()
-      .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("streamId")
-      .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("messageId")
-      .required(PrimitiveTypeName.INT32).named("streamVersion")
-      .required(PrimitiveTypeName.INT64).named("position")
-      .required(PrimitiveTypeName.INT64)
-      .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)).named("createdUtc")
-      .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("type")
-      .optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("jsonData")
-      .optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("jsonMetadata")
-      .named("graft_messages")
-
-    def write(conf: Configuration, path: HPath, rows: Seq[MessageRow]): Unit = {
-      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(path, conf))
-        .withType(Schema)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      val factory = new SimpleGroupFactory(Schema)
-      try rows.foreach { r =>
-        val g = factory.newGroup()
-        g.append("streamId", r.streamId)
-        g.append("messageId", r.messageId)
-        g.append("streamVersion", r.streamVersion)
-        g.append("position", r.position)
-        g.append("createdUtc", r.createdMicros)
-        g.append("type", r.`type`)
-        if (r.jsonData != null) g.append("jsonData", r.jsonData)
-        if (r.jsonMetadata != null) g.append("jsonMetadata", r.jsonMetadata)
-        writer.write(g)
-      } finally writer.close()
-    }
-  }
 }
