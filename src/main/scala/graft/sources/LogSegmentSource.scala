@@ -3,7 +3,7 @@ package graft.sources
 import graft.store.{DirectParquet, MessageRow}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
@@ -14,7 +14,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.charset.StandardCharsets
 import java.util.{Map => JMap, OptionalLong}
 import scala.jdk.CollectionConverters._
 
@@ -74,26 +73,6 @@ object LogSegmentSource {
   /** One Hadoop configuration per JVM for footer and segment reads, so
     * opening a file never re-parses the configuration resources. */
   private[sources] lazy val conf: Configuration = new Configuration()
-
-  /** Resolve the live messages generation exactly as the store does
-    * (`SparkStreamStore.loadGeneration`): `CURRENT` names it, else the
-    * plain `messages/` dir. */
-  private[sources] def resolveMessagesDir(fs: FileSystem, root: String): String = {
-    val cur = new HPath(root + "/CURRENT")
-    val gen: Long =
-      if (!fs.exists(cur)) 0L
-      else {
-        val in = fs.open(cur)
-        val text =
-          try {
-            val bytes = new Array[Byte](fs.getFileStatus(cur).getLen.toInt)
-            in.readFully(0, bytes)
-            new String(bytes, StandardCharsets.UTF_8).trim
-          } finally in.close()
-        text.toLongOption.getOrElse(0L)
-      }
-    if (gen == 0L) root + "/messages" else root + s"/messages-g$gen"
-  }
 
   /** The inclusive position interval implied by the pushable filters. */
   private[sources] def positionBounds(filters: Seq[Filter]): (Long, Long) = {
@@ -165,7 +144,7 @@ private class LogSegmentScanBuilder(root: String)
   private lazy val allSegments: Seq[DirectParquet.Segment] = {
     val conf = LogSegmentSource.conf
     val fs = new HPath(root).getFileSystem(conf)
-    DirectParquet.listSegments(conf, LogSegmentSource.resolveMessagesDir(fs, root))
+    DirectParquet.listSegments(conf, DirectParquet.generationDir(root, DirectParquet.liveGeneration(fs, root)))
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {

@@ -81,6 +81,47 @@ private[graft] object DirectParquet {
   }
 
   /** One log segment with its footer-derived zone map. */
+  /** The messages directory of generation `g` under a store root. */
+  def generationDir(root: String, g: Long): String =
+    if (g == 0L) root + "/messages" else root + s"/messages-g$g"
+
+  /** Every messages generation directory under `root`: (generation, path). */
+  def generationDirs(fs: FileSystem, root: String): Seq[(Long, String)] = {
+    val rootPath = new HPath(root)
+    if (!fs.exists(rootPath)) return Nil
+    fs.listStatus(rootPath).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (n == "messages") Some(0L -> st.getPath.toString)
+      else if (n.startsWith("messages-g"))
+        n.drop("messages-g".length).toLongOption.map(_ -> st.getPath.toString)
+      else None
+    }
+  }
+
+  /** The live messages generation of a store root: `CURRENT` names it; if
+    * absent or corrupt (a crash inside its truncating overwrite can leave
+    * it empty), the highest COMPLETE generation (Spark leaves a `_SUCCESS`
+    * marker; compact never flips the pointer before the write finishes),
+    * else the plain `messages/` dir. The store and `LogSegmentSource` both
+    * resolve it here. */
+  def liveGeneration(fs: FileSystem, root: String): Long = {
+    val current = new HPath(root + "/CURRENT")
+    val named =
+      if (!fs.exists(current)) None
+      else {
+        val in = fs.open(current)
+        try {
+          val bytes = new Array[Byte](fs.getFileStatus(current).getLen.toInt)
+          in.readFully(0, bytes)
+          new String(bytes, java.nio.charset.StandardCharsets.UTF_8).trim.toLongOption
+        } finally in.close()
+      }
+    named.getOrElse {
+      generationDirs(fs, root).filter { case (g, p) => g == 0L || fs.exists(new HPath(p, "_SUCCESS")) }
+        .map(_._1).maxOption.getOrElse(0L)
+    }
+  }
+
   final case class Segment(path: String, bytes: Long, rows: Long, minPos: Long, maxPos: Long)
 
   /** List the segments of one messages generation and read each footer

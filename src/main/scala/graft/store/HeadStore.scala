@@ -12,6 +12,7 @@ private[store] final class Head(
     @volatile var position: Long,
     @volatile var maxAge: Option[Int],
     @volatile var maxCount: Option[Int])
+  extends StreamStoreBase.StreamHead
 
 /** Storage of the per-stream head index: streamId -> [[Head]] plus the
   * creation-order (idInternal) index that keyset-paged listing seeks.

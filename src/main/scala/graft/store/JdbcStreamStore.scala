@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet, SQLException}
-import java.util.UUID
 
-/** RDBMS-backed stream store: the same [[StreamStore]] contract as
-  * [[SparkStreamStore]], persisted in relational tables via JDBC — the
-  * Spark-side twin of the reference's SQL backends
+/** RDBMS-backed stream store: the storage primitives of
+  * [[StreamStoreBase]], which holds the contract itself, over relational
+  * tables via JDBC — the Spark-side twin of the reference's SQL backends
   * (`reference/src/SqlStreamStore.Postgres/PostgresStreamStore.cs`,
   * `PgSqlScripts/Tables.sql:4-47`).
   *
@@ -23,32 +22,21 @@ import java.util.UUID
   * `counters` table persists the dense position / id allocators so heads
   * never regress across reopen, even after physical deletes.
   *
-  * Write path: one JDBC transaction per operation, with the message batch
+  * Writes: the write section is one JDBC transaction per operation,
+  * serialized through `this` (embedded Derby is in-process, matching the
+  * single-JVM driver model; the reference's consistency boundary is the
+  * same per-operation transaction, README.md:25). A message batch is
   * inserted in a single round trip (`PreparedStatement.addBatch` /
-  * `executeBatch`) — the shape of the reference's one-round-trip batch
-  * insert (`PgSqlScripts/AppendToStream.sql:100-113`). The 5-way
-  * expected-version and idempotency semantics are identical to
-  * [[SparkStreamStore]] (both port `InMemoryStream.cs:38-163` /
-  * `EnforceIdempotentAppend.sql:12-39`); here deletes and MaxCount
-  * scavenges are physical row deletes inside the transaction, as in the
-  * reference (`DeleteStreamMessages.sql:1-47`, `Scavenge.sql:23-30`),
-  * rather than tombstones — the RDBMS makes in-place deletes cheap.
+  * `executeBatch`, the shape of `AppendToStream.sql:100-113`). Deletes,
+  * MaxCount scavenges and expired rows are physical row deletes inside
+  * the transaction, as in the reference (`DeleteStreamMessages.sql:1-47`,
+  * `Scavenge.sql:23-30`) — the RDBMS makes in-place deletes cheap.
   *
-  * Read path: paged reads are driver point-queries over the indexed
-  * tables (the page contract is inherently driver-side); the Spark-facing
-  * surface is [[allMessages]], a position-partitioned `spark.read.jdbc`
-  * scan that parallelizes across executors, so analytical queries and
-  * Structured-Streaming-style subscriptions (via
-  * `graft.streaming.Subscriptions`, which runs over the trait) operate on
-  * the same tables. MaxAge expiry is filtered from pages post-read and
-  * purged in-line (`ReadonlyStreamStoreBase.cs:394-490` semantics, with
-  * the purge synchronous instead of task-queued).
-  *
-  * Concurrency: single logical writer per database, serialized through
-  * `this` — embedded Derby is in-process, matching the single-JVM driver
-  * model; the consistency boundary is the per-operation transaction, as
-  * in the reference ("the stream as the … transaction boundary",
-  * reference README.md:25).
+  * Reads: paged reads are driver point-queries over the indexed tables;
+  * the Spark-facing surface is [[allMessages]], a position-partitioned
+  * `spark.read.jdbc` scan that parallelizes across executors, so
+  * analytical queries and subscriptions (`graft.streaming.Subscriptions`,
+  * which runs over the trait) operate on the same tables.
   */
 final class JdbcStreamStore(
     val spark: SparkSession,
@@ -56,9 +44,10 @@ final class JdbcStreamStore(
     clock: Clock = Clock.System,
     trackDeletes: Boolean = true,
     dialect: Option[SqlDialect] = None)
-  extends StreamStore with JdbcPlumbing {
+  extends StreamStoreBase[JdbcStreamStore.HeadRow](clock, trackDeletes) with JdbcPlumbing {
 
   import JdbcStreamStore._
+  import StreamStoreBase._
 
   /** Engine dialect — resolved from the URL unless injected (the seam
     * that carries every engine-variant construct; see [[SqlDialect]]). */
@@ -77,103 +66,67 @@ final class JdbcStreamStore(
   private var nextIdInternal: Long = readCounter("next_id_internal", 0L)
 
   // ------------------------------------------------------------------
-  // Append (ref: AppendToStream.sql:1-177; InMemoryStream.cs:38-163)
+  // Write primitives (the rules calling them live in StreamStoreBase)
   // ------------------------------------------------------------------
 
-  override def appendToStream(
-      streamId: String,
-      expectedVersion: Int,
-      messages: Seq[NewStreamMessage]): AppendResult = synchronized {
-    StreamId.validate(streamId)
-    require(!StreamId.isSystem(streamId), s"stream id must not start with '$$': $streamId")
-    // reject up front (both backends, identically) rather than letting
-    // the unique (stream, message_id) index surface a raw SQLException
-    require(messages.iterator.map(_.messageId).toSet.size == messages.length,
-      s"duplicate message ids within one append batch: $streamId")
-    inTx(appendInternal(streamId, expectedVersion, messages))
-  }
+  /** One transaction per operation, serialized through `this`. */
+  override protected def writeSection[T](f: => T): T = synchronized(inTx(f))
 
-  private def appendInternal(
-      streamId: String,
-      expectedVersion: Int,
-      messages: Seq[NewStreamMessage]): AppendResult = {
-    if (messages.isEmpty && expectedVersion >= 0)
-      return AppendResult(expectedVersion, nextPosition - 1)
+  override protected def headOf(streamId: String): Option[HeadRow] = selectHead(streamId)
 
-    expectedVersion match {
-      case ExpectedVersion.Any | ExpectedVersion.NoStream =>
-        val head = selectHead(streamId).getOrElse(insertHead(streamId))
-        if (expectedVersion == ExpectedVersion.NoStream) appendNoStream(streamId, head, messages)
-        else appendAny(streamId, head, messages)
-      case _ => // EmptyStream (-1) or exact version >= 0: stream must exist
-        val head = selectHead(streamId).getOrElse(throw WrongExpectedVersionException(streamId, expectedVersion))
-        appendExpectedVersion(streamId, head, expectedVersion, messages)
+  override protected def createHead(streamId: String, maxAge: Option[Int], maxCount: Option[Int]): HeadRow = {
+    val idInternal = nextIdInternal
+    nextIdInternal += 1
+    writeCounter("next_id_internal", nextIdInternal)
+    update(s"INSERT INTO $StreamsTable (id, id_original, id_original_reversed, id_internal, version, position, max_age, max_count) VALUES (?,?,?,?,?,?,?,?)") { ps =>
+      ps.setString(1, dbId(streamId))
+      ps.setString(2, streamId)
+      ps.setString(3, reversed(streamId))
+      ps.setLong(4, idInternal)
+      ps.setInt(5, StreamVersion.End)
+      ps.setLong(6, Position.End)
+      setOptInt(ps, 7, maxAge)
+      setOptInt(ps, 8, maxCount)
     }
+    HeadRow(idInternal, StreamVersion.End, Position.End, maxAge, maxCount)
   }
 
-  /** Ref: InMemoryStream.AppendToStreamExpectedVersionNoStream (:139-163). */
-  private def appendNoStream(streamId: String, head: HeadRow, messages: Seq[NewStreamMessage]): AppendResult = {
-    if (head.version >= 0) {
-      val existing = firstIds(head, messages.length)
-      if (messages.length > existing.length) throw WrongExpectedVersionException(streamId, ExpectedVersion.NoStream)
-      if (messages.indices.exists(i => existing(i)._2 != messages(i).messageId))
-        throw WrongExpectedVersionException(streamId, ExpectedVersion.NoStream)
-      AppendResult(head.version, head.position) // full-prefix replay: idempotent no-op
-    } else appendEvents(streamId, head, messages)
-  }
+  // Both idempotency lookups are bounded by the INCOMING batch size —
+  // O(batch) index probes, never an O(stream-length) replay of the full
+  // message list, so appending to a 10M-message stream costs the same as
+  // to a 10-message one (the reference gets the same property by
+  // inserting first and only replaying ids on constraint violation,
+  // AppendToStream.sql:100-151).
 
-  /** Ref: InMemoryStream.AppendToStreamExpectedVersionAny (:105-137). */
-  private def appendAny(streamId: String, head: HeadRow, messages: Seq[NewStreamMessage]): AppendResult = {
-    if (messages.nonEmpty && head.version >= 0) {
-      val stored = storedVersions(head, messages.map(_.messageId))
-      stored.get(messages.head.messageId) match {
-        case Some(v0) =>
-          val slice = sliceFrom(head, v0, messages.length)
-          if (slice.length < messages.length) throw WrongExpectedVersionException(streamId, ExpectedVersion.Any)
-          var n = 1
-          while (n < messages.length) {
-            if (messages(n).messageId != slice(n)._2)
-              throw WrongExpectedVersionException(streamId, ExpectedVersion.Any)
-            n += 1
-          }
-          return AppendResult(head.version, head.position) // exact-suffix replay
-        case None =>
-          // SQL backends raise WrongExpectedVersion on partial overlap
-          // (EnforceIdempotentAppend.sql:12-39)
-          if (stored.nonEmpty)
-            throw WrongExpectedVersionException(streamId, ExpectedVersion.Any)
-      }
-    }
-    appendEvents(streamId, head, messages)
-  }
+  override protected def idsFrom(streamId: String, head: HeadRow, fromVersion: Int, limit: Int): IndexedSeq[(Int, String)] =
+    if (limit <= 0) Vector.empty
+    else query(s"SELECT stream_version, message_id FROM $MessagesTable WHERE stream_id_internal=? AND stream_version >= ? ORDER BY stream_version ${sqlDialect.limitClause(limit)}") {
+      ps => ps.setLong(1, head.idInternal); ps.setInt(2, fromVersion)
+    } { rs => (rs.getInt(1), rs.getString(2)) }
 
-  /** Ref: InMemoryStream.AppendToStreamExpectedVersion (:56-103). */
-  private def appendExpectedVersion(
-      streamId: String, head: HeadRow, expectedVersion: Int, messages: Seq[NewStreamMessage]): AppendResult = {
-    if (expectedVersion > head.version) throw WrongExpectedVersionException(streamId, expectedVersion)
-    if (head.version >= 0 && expectedVersion < head.version) {
-      val byVersion = versionRange(head, expectedVersion + 1, expectedVersion + messages.length)
-      messages.indices.foreach { i =>
-        val v = expectedVersion + i + 1
-        byVersion.get(v) match {
-          case Some(id) if id == messages(i).messageId => ()
-          case _ => throw WrongExpectedVersionException(streamId, expectedVersion)
-        }
-      }
-      AppendResult(head.version, head.position)
-    } else {
-      if (head.version >= 0 && messages.nonEmpty &&
-          storedVersions(head, messages.map(_.messageId)).nonEmpty)
-        throw WrongExpectedVersionException(streamId, expectedVersion)
-      appendEvents(streamId, head, messages)
-    }
-  }
+  /** Point probes of the unique (stream_id_internal, message_id) index,
+    * IN-chunked so huge batches never overflow a statement. The
+    * placeholder count is ROUNDED UP to the next power of two (extras
+    * re-bind the last id — duplicates in an IN list are harmless), so the
+    * whole range of batch sizes maps to ~9 distinct SQL texts and the
+    * statement cache actually hits instead of Derby re-compiling a fresh
+    * N-placeholder plan per append. */
+  override protected def storedVersions(streamId: String, head: HeadRow, ids: Seq[String]): Map[String, Int] =
+    ids.distinct.grouped(IdProbeChunk).flatMap { chunk =>
+      val n = Integer.highestOneBit(math.max(1, chunk.length * 2 - 1))
+      val placeholders = Seq.fill(n)("?").mkString(",")
+      query(s"SELECT message_id, stream_version FROM $MessagesTable WHERE stream_id_internal=? AND message_id IN ($placeholders)") { ps =>
+        ps.setLong(1, head.idInternal)
+        chunk.zipWithIndex.foreach { case (id, i) => ps.setString(i + 2, id) }
+        (chunk.length until n).foreach(i => ps.setString(i + 2, chunk.last))
+      } { rs => rs.getString(1) -> rs.getInt(2) }
+    }.toMap
 
   /** Physical append: batch-insert the messages in one round trip, bump
     * the denormalized head row and the persistent position counter in the
     * same transaction (ref: AppendToStream.sql:100-125). */
-  private def appendEvents(streamId: String, head: HeadRow, messages: Seq[NewStreamMessage]): AppendResult = {
-    if (messages.isEmpty) return AppendResult(head.version, head.position)
+  override protected def writeMessages(streamId: String, head: HeadRow, messages: Seq[NewStreamMessage]): HeadRow = {
+    if (messages.isEmpty) return head
     val nowMicros = {
       val i = clock.nowUtc
       i.getEpochSecond * 1000000L + i.getNano / 1000L
@@ -196,104 +149,47 @@ final class JdbcStreamStore(
       ins.executeBatch()
     } catch { case e: Throwable => try ins.clearBatch() catch { case _: SQLException => () }; throw e }
 
-    val newVersion = head.version + messages.length
-    val newPosition = base + messages.length - 1
+    val after = head.copy(version = head.version + messages.length, position = base + messages.length - 1)
     update(s"UPDATE $StreamsTable SET version=?, position=? WHERE id_internal=?") { ps =>
-      ps.setInt(1, newVersion); ps.setLong(2, newPosition); ps.setLong(3, head.idInternal)
+      ps.setInt(1, after.version); ps.setLong(2, after.position); ps.setLong(3, head.idInternal)
     }
     nextPosition = base + messages.length
     writeCounter("next_position", nextPosition)
-
-    if (streamId.startsWith("$$")) applyMetadataToTarget(streamId.drop(2))
-    val after = head.copy(version = newVersion, position = newPosition)
-    after.maxCount.foreach(mc => scavenge(after, mc))
-    AppendResult(newVersion, newPosition)
+    after
   }
 
-  /** New stream row inherits MaxAge/MaxCount from a pre-existing metadata
-    * stream (ref: AppendToStream.sql:27-37). */
-  private def insertHead(streamId: String): HeadRow = {
-    val (maxAge, maxCount) =
-      if (StreamId.isSystem(streamId)) (None, None)
-      else latestMetadata(streamId).map(m => (m.maxAge, m.maxCount)).getOrElse((None, None))
-    val idInternal = nextIdInternal
-    nextIdInternal += 1
-    writeCounter("next_id_internal", nextIdInternal)
-    update(s"INSERT INTO $StreamsTable (id, id_original, id_original_reversed, id_internal, version, position, max_age, max_count) VALUES (?,?,?,?,?,?,?,?)") { ps =>
-      ps.setString(1, dbId(streamId))
-      ps.setString(2, streamId)
-      ps.setString(3, reversed(streamId))
-      ps.setLong(4, idInternal)
-      ps.setInt(5, StreamVersion.End)
-      ps.setLong(6, Position.End)
-      setOptInt(ps, 7, maxAge)
-      setOptInt(ps, 8, maxCount)
+  override protected def writeRetention(streamId: String, head: HeadRow, maxAge: Option[Int], maxCount: Option[Int]): Unit =
+    update(s"UPDATE $StreamsTable SET max_age=?, max_count=? WHERE id_internal=?") { ps =>
+      setOptInt(ps, 1, maxAge); setOptInt(ps, 2, maxCount); ps.setLong(3, head.idInternal)
     }
-    HeadRow(streamId, idInternal, StreamVersion.End, Position.End, maxAge, maxCount)
+
+  /** Physical row delete below the version ceiling, as the reference does
+    * post-append (ref: Scavenge.sql:23-30). */
+  override protected def scavenge(streamId: String, head: HeadRow, ceiling: Int): Unit =
+    update(s"DELETE FROM $MessagesTable WHERE stream_id_internal=? AND stream_version<=?") { ps =>
+      ps.setLong(1, head.idInternal); ps.setInt(2, ceiling)
+    }
+
+  override protected def dropStreams(streams: Seq[(String, HeadRow)]): Unit =
+    streams.foreach { case (_, head) =>
+      update(s"DELETE FROM $MessagesTable WHERE stream_id_internal=?")(_.setLong(1, head.idInternal))
+      update(s"DELETE FROM $StreamsTable WHERE id_internal=?")(_.setLong(1, head.idInternal))
+    }
+
+  override protected def dropMessage(streamId: String, head: HeadRow, messageId: String): Boolean =
+    updateCount(s"DELETE FROM $MessagesTable WHERE stream_id_internal=? AND message_id=?") {
+      ps => ps.setLong(1, head.idInternal); ps.setString(2, messageId)
+    } > 0
+
+  /** Expired rows are deleted synchronously, in the reading call: one
+    * DELETE per row plus one tracking append, in one transaction. */
+  override protected def onExpired(expired: Seq[StreamMessage]): Unit = writeSection {
+    val deleted = expired.filter(m => updateCount(s"DELETE FROM $MessagesTable WHERE position=?")(_.setLong(1, m.position)) > 0)
+    trackMessagesDeleted(deleted.map(m => m.streamId -> m.messageId))
   }
-
-  /** MaxCount retention: physically delete rows below the version cutoff,
-    * as the reference does post-append (ref: Scavenge.sql:23-30,
-    * PostgresStreamStore.Append.cs:69-77). */
-  private def scavenge(head: HeadRow, maxCount: Int): Unit = {
-    val cutoff = head.version - maxCount // keep versions > cutoff
-    if (cutoff >= 0)
-      update(s"DELETE FROM $MessagesTable WHERE stream_id_internal=? AND stream_version<=?") { ps =>
-        ps.setLong(1, head.idInternal); ps.setInt(2, cutoff)
-      }
-  }
-
-  // Idempotency replay checks (ref: EnforceIdempotentAppend.sql:12-39).
-  // All three lookups are bounded by the INCOMING batch size — O(batch)
-  // index probes, never an O(stream-length) replay of the full message
-  // list, so appending to a 10M-message stream costs the same as to a
-  // 10-message one (the reference gets the same property by inserting
-  // first and only replaying ids on constraint violation,
-  // AppendToStream.sql:100-151).
-
-  /** First `limit` (version, messageId) pairs in version order. */
-  private def firstIds(head: HeadRow, limit: Int): IndexedSeq[(Int, String)] =
-    if (limit <= 0) Vector.empty
-    else query(s"SELECT stream_version, message_id FROM $MessagesTable WHERE stream_id_internal=? ORDER BY stream_version ${sqlDialect.limitClause(limit)}") {
-      ps => ps.setLong(1, head.idInternal)
-    } { rs => (rs.getInt(1), rs.getString(2)) }
-
-  /** `limit` (version, messageId) pairs starting at `fromVersion`, in
-    * version order — the stored run an exact-suffix replay must match. */
-  private def sliceFrom(head: HeadRow, fromVersion: Int, limit: Int): IndexedSeq[(Int, String)] =
-    if (limit <= 0) Vector.empty
-    else query(s"SELECT stream_version, message_id FROM $MessagesTable WHERE stream_id_internal=? AND stream_version >= ? ORDER BY stream_version ${sqlDialect.limitClause(limit)}") {
-      ps => ps.setLong(1, head.idInternal); ps.setInt(2, fromVersion)
-    } { rs => (rs.getInt(1), rs.getString(2)) }
-
-  /** version -> messageId for stored versions in [lo, hi]. */
-  private def versionRange(head: HeadRow, lo: Int, hi: Int): Map[Int, String] =
-    if (hi < lo) Map.empty
-    else query(s"SELECT stream_version, message_id FROM $MessagesTable WHERE stream_id_internal=? AND stream_version BETWEEN ? AND ?") {
-      ps => ps.setLong(1, head.idInternal); ps.setInt(2, lo); ps.setInt(3, hi)
-    } { rs => rs.getInt(1) -> rs.getString(2) }.toMap
-
-  /** Which of `ids` are already stored in the stream → messageId ->
-    * stored version; point probes of the unique
-    * (stream_id_internal, message_id) index, IN-chunked so huge batches
-    * never overflow a statement. The placeholder count is ROUNDED UP to
-    * the next power of two (extras re-bind the last id — duplicates in an
-    * IN list are harmless), so the whole range of batch sizes maps to
-    * ~9 distinct SQL texts and the statement cache actually hits instead
-    * of Derby re-compiling a fresh N-placeholder plan per append. */
-  private def storedVersions(head: HeadRow, ids: Seq[String]): Map[String, Int] =
-    ids.distinct.grouped(IdProbeChunk).flatMap { chunk =>
-      val n = Integer.highestOneBit(math.max(1, chunk.length * 2 - 1))
-      val placeholders = Seq.fill(n)("?").mkString(",")
-      query(s"SELECT message_id, stream_version FROM $MessagesTable WHERE stream_id_internal=? AND message_id IN ($placeholders)") { ps =>
-        ps.setLong(1, head.idInternal)
-        chunk.zipWithIndex.foreach { case (id, i) => ps.setString(i + 2, id) }
-        (chunk.length until n).foreach(i => ps.setString(i + 2, chunk.last))
-      } { rs => rs.getString(1) -> rs.getInt(2) }
-    }.toMap
 
   // ------------------------------------------------------------------
-  // Reads (ref: ReadAll.sql, Read.sql, ReadonlyStreamStoreBase.cs)
+  // Read primitives (ref: ReadAll.sql, Read.sql)
   // ------------------------------------------------------------------
 
   private def selectSql(prefetch: Boolean): String = {
@@ -302,118 +198,33 @@ final class JdbcStreamStore(
       s"FROM $MessagesTable m JOIN $StreamsTable s ON s.id_internal = m.stream_id_internal"
   }
 
-  private def readMsg(rs: ResultSet): (StreamMessage, Option[Int]) = {
+  private def readRow(rs: ResultSet): PageRow = {
     val micros = rs.getLong(5)
     val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
     ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    val maxAge = { val v = rs.getInt(9); if (rs.wasNull()) None else Some(v) }
-    (StreamMessage(rs.getString(1), rs.getString(2), rs.getInt(3), rs.getLong(4), ts,
-      rs.getString(6), rs.getString(7), rs.getString(8)), maxAge)
+    PageRow(StreamMessage(rs.getString(1), rs.getString(2), rs.getInt(3), rs.getLong(4), ts,
+      rs.getString(6), rs.getString(7), rs.getString(8)), optInt(rs, 9))
   }
 
-  /** TTL filter, applied post-read like the reference
-    * (`ReadonlyStreamStoreBase.cs:394-490`): expired messages are dropped
-    * from the page and purged; `$` streams exempt (their head rows never
-    * carry max_age). Purge is synchronous here — one DELETE batch plus one
-    * tracking append, inside the reading operation's transaction. */
-  private def filterExpired(msgs: Seq[(StreamMessage, Option[Int])]): Seq[StreamMessage] = {
-    val now = clock.nowUtc
-    val (keep, expired) = msgs.partition { case (m, maxAge) =>
-      maxAge.forall(a => m.createdUtc.toInstant.plusSeconds(a.toLong).isAfter(now))
+  /** `WHERE <column> >= ? ORDER BY <column>` forward, `<=` / `DESC` backward. */
+  private def seek(column: String, direction: ReadDirection): String =
+    if (direction == ReadDirection.Forward) s"$column >= ? ORDER BY $column"
+    else s"$column <= ? ORDER BY $column DESC"
+
+  override protected def fetchAll(from: Long, n: Int, direction: ReadDirection, prefetch: Boolean): IndexedSeq[PageRow] =
+    synchronized(inTx(query(selectSql(prefetch) + s" WHERE ${seek("m.position", direction)} ${sqlDialect.limitClause(n)}") {
+      ps => ps.setLong(1, from)
+    }(readRow)))
+
+  override protected def fetchStream(streamId: String, from: Int, n: Int, direction: ReadDirection,
+      prefetch: Boolean): Option[StreamRows] = synchronized(inTx {
+    selectHead(streamId).map { head =>
+      StreamRows(head.version, head.position,
+        query(selectSql(prefetch) + s" WHERE m.stream_id_internal = ? AND ${seek("m.stream_version", direction)} ${sqlDialect.limitClause(n)}") {
+          ps => ps.setLong(1, head.idInternal); ps.setInt(2, from)
+        }(readRow))
     }
-    if (expired.nonEmpty) {
-      expired.foreach { case (m, _) =>
-        update(s"DELETE FROM $MessagesTable WHERE position=?")(_.setLong(1, m.position))
-      }
-      if (trackDeletes) {
-        val tombs = expired.map(_._1).filterNot(m => StreamId.isSystem(m.streamId)).map(m =>
-          NewStreamMessage(UUID.randomUUID().toString, Deleted.MessageDeletedMessageType,
-            Deleted.messageDeletedPayload(m.streamId, m.messageId)))
-        if (tombs.nonEmpty) appendInternal(Deleted.DeletedStreamId, ExpectedVersion.Any, tombs)
-      }
-    }
-    keep.map(_._1)
-  }
-
-  override def readAllForwards(from: Long, maxCount: Int, prefetch: Boolean): ReadAllPage = synchronized {
-    require(maxCount > 0)
-    val fromPos = if (from == Position.End) Long.MaxValue else from
-    val rows = inTx(query(selectSql(prefetch) + s" WHERE m.position >= ? ORDER BY m.position ${sqlDialect.limitClause(maxCount + 1)}") {
-      ps => ps.setLong(1, fromPos)
-    }(readMsg))
-    val isEnd = rows.length <= maxCount
-    val page = rows.take(maxCount)
-    val nextPos =
-      if (!isEnd) rows(maxCount)._1.position
-      else if (page.nonEmpty) page.last._1.position + 1
-      else fromPos
-    val kept = inTx(filterExpired(page))
-    ReadAllPage(from, nextPos, isEnd, ReadDirection.Forward, kept,
-      () => readAllForwards(nextPos, maxCount, prefetch))
-  }
-
-  override def readAllBackwards(from: Long, maxCount: Int, prefetch: Boolean): ReadAllPage = synchronized {
-    require(maxCount > 0)
-    val fromPos = if (from == Position.End) Long.MaxValue else from
-    val rows = inTx(query(selectSql(prefetch) + s" WHERE m.position <= ? ORDER BY m.position DESC ${sqlDialect.limitClause(maxCount + 1)}") {
-      ps => ps.setLong(1, fromPos)
-    }(readMsg))
-    if (rows.isEmpty)
-      return ReadAllPage(Position.Start, Position.Start, isEnd = true,
-        ReadDirection.Backward, Nil,
-        () => readAllBackwards(Position.Start, maxCount, prefetch))
-    val isEnd = rows.length <= maxCount
-    val page = rows.take(maxCount)
-    val nextPos = if (!isEnd) rows(maxCount)._1.position else Position.Start
-    val kept = inTx(filterExpired(page))
-    val resolvedFrom = kept.headOption.map(_.position).getOrElse(0L)
-    ReadAllPage(resolvedFrom, nextPos, isEnd, ReadDirection.Backward, kept,
-      () => readAllBackwards(nextPos, maxCount, prefetch))
-  }
-
-  override def readStreamForwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = synchronized {
-    require(maxCount > 0)
-    inTx(selectHead(streamId)) match {
-      case None =>
-        ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
-          StreamVersion.End, Position.End, ReadDirection.Forward, isEnd = true, Nil,
-          () => readStreamForwards(streamId, fromVersion, maxCount, prefetch))
-      case Some(head) =>
-        val fromV = math.max(fromVersion, 0)
-        val rows = inTx(query(selectSql(prefetch) + s" WHERE m.stream_id_internal = ? AND m.stream_version >= ? ORDER BY m.stream_version ${sqlDialect.limitClause(maxCount + 1)}") {
-          ps => ps.setLong(1, head.idInternal); ps.setInt(2, fromV)
-        }(readMsg))
-        val isEnd = rows.length <= maxCount
-        val page = rows.take(maxCount)
-        val nextV = if (!isEnd) rows(maxCount)._1.streamVersion else head.version + 1
-        val kept = inTx(filterExpired(page))
-        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, head.version,
-          head.position, ReadDirection.Forward, isEnd, kept,
-          () => readStreamForwards(streamId, nextV, maxCount, prefetch))
-    }
-  }
-
-  override def readStreamBackwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = synchronized {
-    require(maxCount > 0)
-    inTx(selectHead(streamId)) match {
-      case None =>
-        ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
-          StreamVersion.End, Position.End, ReadDirection.Backward, isEnd = true, Nil,
-          () => readStreamBackwards(streamId, fromVersion, maxCount, prefetch))
-      case Some(head) =>
-        val fromV = if (fromVersion == StreamVersion.End) Int.MaxValue else fromVersion
-        val rows = inTx(query(selectSql(prefetch) + s" WHERE m.stream_id_internal = ? AND m.stream_version <= ? ORDER BY m.stream_version DESC ${sqlDialect.limitClause(maxCount + 1)}") {
-          ps => ps.setLong(1, head.idInternal); ps.setInt(2, fromV)
-        }(readMsg))
-        val isEnd = rows.length <= maxCount
-        val page = rows.take(maxCount)
-        val nextV = if (!isEnd) rows(maxCount)._1.streamVersion else StreamVersion.End
-        val kept = inTx(filterExpired(page))
-        ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, head.version,
-          head.position, ReadDirection.Backward, isEnd, kept,
-          () => readStreamBackwards(streamId, nextV, maxCount, prefetch))
-    }
-  }
+  })
 
   override def readHeadPosition(): Long = synchronized { nextPosition - 1 }
 
@@ -422,118 +233,6 @@ final class JdbcStreamStore(
 
   override def readStreamHeadVersion(streamId: String): Int =
     synchronized { inTx(selectHead(streamId)).map(_.version).getOrElse(StreamVersion.End) }
-
-  override def readMessageData(streamId: String, streamVersion: Int): Option[String] = synchronized {
-    inTx(query(
-      s"SELECT m.json_data FROM $MessagesTable m JOIN $StreamsTable s ON s.id_internal = m.stream_id_internal WHERE s.id=? AND m.stream_version=?") {
-      ps => ps.setString(1, dbId(streamId)); ps.setInt(2, streamVersion)
-    }(_.getString(1)).headOption)
-  }
-
-  // ------------------------------------------------------------------
-  // Deletes (ref: DeleteStream.sql:1-74, DeleteStreamMessages.sql:1-47)
-  // ------------------------------------------------------------------
-
-  override def deleteStream(streamId: String, expectedVersion: Int): Unit = synchronized {
-    require(!StreamId.isSystem(streamId), s"stream id must not start with '$$': $streamId")
-    inTx {
-      val head = selectHead(streamId)
-      if (head.isEmpty) {
-        if (expectedVersion >= 0) throw WrongExpectedVersionException(streamId, expectedVersion)
-      } else {
-        if (expectedVersion >= 0 && head.get.version != expectedVersion)
-          throw WrongExpectedVersionException(streamId, expectedVersion)
-        val metaId = MetadataStream.of(streamId)
-        val metaHead = selectHead(metaId)
-        dropStream(head.get)
-        metaHead.foreach(dropStream)
-        if (trackDeletes) {
-          val events = Seq(NewStreamMessage(
-            UUID.randomUUID().toString, Deleted.StreamDeletedMessageType,
-            Deleted.streamDeletedPayload(streamId))) ++
-            metaHead.map(_ => NewStreamMessage(
-              UUID.randomUUID().toString, Deleted.StreamDeletedMessageType,
-              Deleted.streamDeletedPayload(metaId)))
-          appendInternal(Deleted.DeletedStreamId, ExpectedVersion.Any, events)
-        }
-      }
-    }
-  }
-
-  private def dropStream(head: HeadRow): Unit = {
-    update(s"DELETE FROM $MessagesTable WHERE stream_id_internal=?")(_.setLong(1, head.idInternal))
-    update(s"DELETE FROM $StreamsTable WHERE id_internal=?")(_.setLong(1, head.idInternal))
-  }
-
-  override def deleteMessage(streamId: String, messageId: String): Unit = synchronized {
-    inTx {
-      selectHead(streamId).foreach { head =>
-        val n = updateCount(s"DELETE FROM $MessagesTable WHERE stream_id_internal=? AND message_id=?") {
-          ps => ps.setLong(1, head.idInternal); ps.setString(2, messageId)
-        }
-        if (n > 0 && trackDeletes && !StreamId.isSystem(streamId)) {
-          val tomb = NewStreamMessage(
-            UUID.randomUUID().toString, Deleted.MessageDeletedMessageType,
-            Deleted.messageDeletedPayload(streamId, messageId))
-          appendInternal(Deleted.DeletedStreamId, ExpectedVersion.Any, Seq(tomb))
-        }
-      }
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Metadata (ref: PostgresStreamStore.Metadata.cs:25-52, SetStreamMetadata.sql)
-  // ------------------------------------------------------------------
-
-  override def getStreamMetadata(streamId: String): StreamMetadataResult = synchronized {
-    inTx(latestMetadataMessage(streamId)) match {
-      case None => StreamMetadataResult(streamId, StreamVersion.End, None, None, null)
-      case Some((version, json)) =>
-        val m = MetadataJson.read(json)
-        StreamMetadataResult(streamId, version, m.maxAge, m.maxCount, m.metaJson.orNull)
-    }
-  }
-
-  override def setStreamMetadata(
-      streamId: String,
-      expectedStreamMetadataVersion: Int,
-      maxAge: Option[Int],
-      maxCount: Option[Int],
-      metadataJson: Option[String]): Unit = synchronized {
-    require(!StreamId.isSystem(streamId) || streamId == Deleted.DeletedStreamId,
-      s"stream id must not start with '$$': $streamId") // ref: StreamStoreBase.cs:115-118
-    val payload = MetadataJson.write(MetadataMessage(streamId, maxAge, maxCount, metadataJson))
-    val msg = NewStreamMessage(
-      DeterministicUuid.forMetadata(streamId, payload).toString,
-      MetadataStream.MetadataMessageType, payload)
-    inTx {
-      appendInternal(MetadataStream.of(streamId), expectedStreamMetadataVersion, Seq(msg))
-      // applyMetadataToTarget ran inside appendEvents; scavenge the target
-      // if maxCount shrank (ref: CheckStreamMaxCount after SetStreamMetadata)
-      selectHead(streamId).foreach(h => h.maxCount.foreach(mc => scavenge(h, mc)))
-    }
-  }
-
-  /** Propagate the latest `$$s` metadata to stream `s`'s head retention
-    * settings (ref: SetStreamMetadata.sql:20-37). */
-  private def applyMetadataToTarget(targetStreamId: String): Unit =
-    latestMetadata(targetStreamId).foreach { m =>
-      selectHead(targetStreamId).foreach { h =>
-        update(s"UPDATE $StreamsTable SET max_age=?, max_count=? WHERE id_internal=?") { ps =>
-          setOptInt(ps, 1, m.maxAge); setOptInt(ps, 2, m.maxCount); ps.setLong(3, h.idInternal)
-        }
-      }
-    }
-
-  private def latestMetadata(streamId: String): Option[MetadataMessage] =
-    latestMetadataMessage(streamId).map { case (_, json) => MetadataJson.read(json) }
-
-  private def latestMetadataMessage(streamId: String): Option[(Int, String)] =
-    selectHead(MetadataStream.of(streamId)).flatMap { h =>
-      query(s"SELECT stream_version, json_data FROM $MessagesTable WHERE stream_id_internal=? ORDER BY stream_version DESC ${sqlDialect.limitClause(1)}") {
-        ps => ps.setLong(1, h.idInternal)
-      } { rs => (rs.getInt(1), rs.getString(2)) }.headOption
-    }
 
   // ------------------------------------------------------------------
   // ListStreams (ref: ListStreams.sql:10-16, Pattern.cs:7-37)
@@ -636,11 +335,7 @@ final class JdbcStreamStore(
   private def selectHead(streamId: String): Option[HeadRow] =
     query(s"SELECT id_internal, version, position, max_age, max_count FROM $StreamsTable WHERE id=?") {
       ps => ps.setString(1, dbId(streamId))
-    } { rs =>
-      val maxAge = { val v = rs.getInt(4); if (rs.wasNull()) None else Some(v) }
-      val maxCount = { val v = rs.getInt(5); if (rs.wasNull()) None else Some(v) }
-      HeadRow(streamId, rs.getLong(1), rs.getInt(2), rs.getLong(3), maxAge, maxCount)
-    }.headOption
+    } { rs => HeadRow(rs.getLong(1), rs.getInt(2), rs.getLong(3), optInt(rs, 4), optInt(rs, 5)) }.headOption
 
   /** Run `f` in the connection's transaction: commit on success, roll back
     * on failure. Re-entrant (inner calls piggyback on the outer tx) so
@@ -955,13 +650,12 @@ object JdbcStreamStore {
     def isMatch: Boolean = currentVersion == expectedVersion
   }
 
-  private final case class HeadRow(
-      streamId: String,
+  private[store] final case class HeadRow(
       idInternal: Long,
       version: Int,
       position: Long,
       maxAge: Option[Int],
-      maxCount: Option[Int])
+      maxCount: Option[Int]) extends StreamStoreBase.StreamHead
 
   /** Schema of [[JdbcStreamStore.allMessages]] — identical to
     * `SparkStreamStore`'s message schema so queries are backend-agnostic. */

@@ -198,4 +198,18 @@ class LogSegmentSourceSpec extends AnyFunSuite {
       assert(scan.estimateStatistics().sizeInBytes().getAsLong > 0)
     } finally store.close()
   }
+
+  test("an empty CURRENT resolves to the generation the store falls back to") {
+    val dir = SparkTestSession.tempDir("logseg-lost-current")
+    buildStore(dir, batches = 2, perBatch = 5).close()
+    val compacted = new SparkStreamStore(spark, dir)
+    try compacted.compact(1) finally compacted.close()
+    // a crash inside CURRENT's truncating overwrite leaves it empty
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/CURRENT"), Array.emptyByteArray)
+    val reopened = new SparkStreamStore(spark, dir) // falls back to messages-g1, deletes messages/
+    try {
+      assert(reopened.allMessages.count() === 10)
+      assert(readLog(dir).count() === 10)
+    } finally reopened.close()
+  }
 }

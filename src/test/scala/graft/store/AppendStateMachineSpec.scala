@@ -123,3 +123,4 @@ trait AppendStateMachineBehaviors extends AnyFunSuite {
 
 class AppendStateMachineSpec extends AppendStateMachineBehaviors with ParquetBackend
 class JdbcAppendStateMachineSpec extends AppendStateMachineBehaviors with DerbyBackend
+class HttpAppendStateMachineSpec extends AppendStateMachineBehaviors with HttpBackend

@@ -96,3 +96,4 @@ trait DeleteBehaviors extends AnyFunSuite with BeforeAndAfterEach {
 
 class DeleteSpec extends DeleteBehaviors with ParquetBackend
 class JdbcDeleteSpec extends DeleteBehaviors with DerbyBackend
+class HttpDeleteSpec extends DeleteBehaviors with HttpBackend

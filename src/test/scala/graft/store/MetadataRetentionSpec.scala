@@ -101,3 +101,4 @@ trait MetadataRetentionBehaviors extends AnyFunSuite with BeforeAndAfterEach {
 
 class MetadataRetentionSpec extends MetadataRetentionBehaviors with ParquetBackend
 class JdbcMetadataRetentionSpec extends MetadataRetentionBehaviors with DerbyBackend
+class HttpMetadataRetentionSpec extends MetadataRetentionBehaviors with HttpBackend
