@@ -33,7 +33,7 @@ import scala.collection.mutable
   * buffered in a driver-side memtable that every read also sees — the
   * single-writer twin of the reference's one-round-trip batch insert
   * (`AppendToStream.sql:100-113`). The memtable is flushed to ONE sorted
-  * parquet segment per window (`flushEveryRows`/`flushEveryBytes`,
+  * parquet segment per window (`flushEveryRows`/[[SparkStreamStore.FlushEveryBytes]],
   * [[flush]], [[compact]], [[close]]), which amortizes the parquet
   * writer+footer cost (~27 ms/file) across the window; parquet min/max
   * stats, held per file in a driver zone map, give position-range
@@ -68,7 +68,7 @@ import scala.collection.mutable
   *
   * Durability: every append is in the WAL before the call returns; the
   * heads journal is written on every rare mutation (delete, retention
-  * change, empty-stream creation), every `journalEvery` appends, and on
+  * change, empty-stream creation), every [[SparkStreamStore.JournalEvery]] appends, and on
   * [[close]]. Recovery = WAL replay (rows above the last flushed segment)
   * + journal replay + a tail scan of the log above the journal's position
   * watermark, so reopening after a clean close is O(journal), not O(log).
@@ -82,15 +82,11 @@ final class SparkStreamStore(
     rootDir: String,
     clock: Clock = Clock.System,
     trackDeletes: Boolean = true,
-    journalEvery: Int = 64,
-    maxCachedChain: Int = 100000,
     autoCompactEvery: Int = 0, // >0: background-compact after that many flushed log segments
-    flushEveryRows: Int = 4096, // group-commit window: flush the memtable to a parquet segment after this many buffered rows...
-    flushEveryBytes: Long = 32L << 20, // ...or this many buffered payload bytes, whichever comes first
+    flushEveryRows: Int = 4096, // group-commit window: flush the memtable to a parquet segment after this many buffered rows (or FlushEveryBytes of payload, whichever comes first)
     headCacheCapacity: Int = 0, // >0: bound driver head memory to an LRU of this many hot heads over an embedded Derby spill from the start (0 = in memory until autoSpillHeads)
     autoSpillHeads: Long = 1L << 20, // with headCacheCapacity = 0: head count at which the in-memory store migrates to the Derby spill (~100 MB of driver heap); <= 0 disables auto-spill
-    leaseTimeoutMs: Long = 30000L, // cross-process writer lease mode: >0 = STRICT (default; a second open fails loudly unless the holder's heartbeat is older than this, so a live writer is never fenced and never loses acked appends — r15 advice); 0 = explicit takeover-with-fencing (crash restarts never wait, but a live previous writer is fenced and its in-flight acks lose at recovery)
-    leaseHeartbeatMs: Long = 1000L) // writer-lease heartbeat/verification cadence (see WriterLease)
+    leaseTimeoutMs: Long = 30000L) // cross-process writer lease mode: >0 = STRICT (default; a second open fails loudly unless the holder's heartbeat is older than this, so a live writer is never fenced and never loses acked appends — r15 advice); 0 = explicit takeover-with-fencing (crash restarts never wait, but a live previous writer is fenced and its in-flight acks lose at recovery)
   extends StreamStoreBase[Head](clock, trackDeletes) {
 
   import SparkStreamStore._
@@ -182,7 +178,7 @@ final class SparkStreamStore(
     * the idempotency replay checks and message-id -> position resolution
     * for deletes — lazily loaded, maintained incrementally on append
     * (VERDICT r1: replaces the per-append full-stream collect). Bounded
-    * per stream by `maxCachedChain` AND across streams by
+    * per stream by `MaxCachedChain` AND across streams by
     * `MaxChainCacheEntries` total cached tuples (access-ordered LRU;
     * round 5) — an evicted chain falls back to one log query, so this
     * cache never grows with stream count. */
@@ -209,7 +205,7 @@ final class SparkStreamStore(
   /** Scavenge cutoffs awaiting persistence (latest per stream): driver
     * state is updated immediately (reads honor the cutoff right away) but
     * the tombstone record rides the next journal-cadence flush — a crash
-    * loses at most `journalEvery` appends' worth, and the next append to
+    * loses at most `JournalEvery` appends' worth, and the next append to
     * the capped stream re-scavenges past the lost cutoff. */
   private val pendingCutoffs = mutable.Map.empty[String, Tomb]
 
@@ -234,7 +230,7 @@ final class SparkStreamStore(
     * cross-JVM twin here; see [[WriterLease]] for the two modes and the
     * fencing-window analysis. */
   private[store] val lease: WriterLease =
-    WriterLease.acquire(fs, root, leaseTimeoutMs, leaseHeartbeatMs, log)
+    WriterLease.acquire(fs, root, leaseTimeoutMs, LeaseHeartbeatMs, log)
 
   recover()
 
@@ -244,13 +240,13 @@ final class SparkStreamStore(
 
   /** `synchronized` on `this`, refused by a fenced writer. The heads
     * journal (when a retention change made it due, or every
-    * `journalEvery` appends) and the memtable flush follow the whole
+    * `JournalEvery` appends) and the memtable flush follow the whole
     * operation, so they see the scavenge cutoffs it recorded. */
   override protected def writeSection[T](f: => T): T = synchronized {
     lease.ensureValid() // fenced writers refuse, they don't corrupt
     val result = f
-    if (journalDue || appendsSinceJournal >= journalEvery) writeJournal(dirtyStreams.toSeq, Nil)
-    if (memtable.length >= flushEveryRows || memtableBytes >= flushEveryBytes) flushMemtable()
+    if (journalDue || appendsSinceJournal >= JournalEvery) writeJournal(dirtyStreams.toSeq, Nil)
+    if (memtable.length >= flushEveryRows || memtableBytes >= FlushEveryBytes) flushMemtable()
     result
   }
 
@@ -337,7 +333,7 @@ final class SparkStreamStore(
 
   private def cacheChain(streamId: String, chain: IndexedSeq[(Int, String, Long)]): Unit = {
     chainRemove(streamId)
-    if (chain.length <= maxCachedChain) {
+    if (chain.length <= MaxCachedChain) {
       idChains.put(streamId, chain)
       chainCacheEntries += chain.length
       // evict least-recently-used chains until under the global budget;
@@ -1064,21 +1060,19 @@ final class SparkStreamStore(
     val dir = new HPath(walDir)
     if (!fs.exists(dir)) return
     val epochRx = """wal-e(\d+)-p\d+\.jsonl""".r
-    val rows = listJsonFiles(dir, perFileTornTail = true).flatMap {
-      case (name, nodes) =>
-        val epoch = name match {
-          case epochRx(e) => e.toLong
-          case _ => 0L // pre-lease naming: wal-<position>.jsonl
-        }
-        nodes.map(n => (epoch, n))
-    }.flatMap { case (epoch, n) =>
-      try Some((epoch, MessageRow(
+    val rows = mutable.ArrayBuffer.empty[(Long, MessageRow)]
+    foreachJsonLine(dir, perFileTornTail = true) { (name, n) =>
+      val epoch = name match {
+        case epochRx(e) => e.toLong
+        case _ => 0L // pre-lease naming: wal-<position>.jsonl
+      }
+      try rows += ((epoch, MessageRow(
         n.get("streamId").asText, n.get("messageId").asText,
         n.get("streamVersion").asInt, n.get("position").asLong,
         n.get("createdMicros").asLong, n.get("type").asText,
         Option(n.get("jsonData")).map(_.asText).orNull,
         Option(n.get("jsonMetadata")).map(_.asText).orNull)))
-      catch { case _: Throwable => None }
+      catch { case _: Throwable => () }
     }
     // lost acks must be OBSERVABLE, not silent (r15 advice): count the
     // lower-epoch rows the highest-epoch-wins rule is about to discard
@@ -1113,78 +1107,56 @@ final class SparkStreamStore(
   private def reapplyCutoffs(): Unit =
     heads.iterator.foreach { case (id, h) => enforceMaxCount(id, h) }
 
-  /** Parse one recovery line, tolerating ONLY a torn tail line (the last
-    * line of the last file — a crash mid-write). A corrupt INTERIOR line
-    * means real state loss, so recovery fails loudly instead of silently
-    * skipping it; and only parse errors are caught — a fatal error (OOM)
-    * during parse propagates. */
-  private def parseRecoveryLine(line: String, file: HPath, isTail: Boolean)
-      : Option[com.fasterxml.jackson.databind.JsonNode] =
-    try Some(Mapper.readTree(line))
-    catch {
-      case e @ (_: com.fasterxml.jackson.core.JacksonException | _: java.io.IOException) =>
-        if (isTail) None
-        else throw new java.io.IOException(
-          s"corrupt interior line in $file — refusing to recover from partial state", e)
-    }
-
-  /** Streamed per-line visit of a JSON-lines directory in file-name order
-    * (bounded memory — the journal can be as big as the stream count). */
-  private def foreachJsonLine(dir: HPath)(f: com.fasterxml.jackson.databind.JsonNode => Unit): Unit = {
+  /** Streamed visit of a JSON-lines directory in file-name order, one
+    * line at a time (bounded memory — the journal can be as big as the
+    * stream count): `f(fileName, node)` per non-empty line. Every writer
+    * ends each line with '\n', so a torn tail — a crash mid-write, an
+    * append that never acknowledged, dropped here — is only ever the last
+    * line of a file that does NOT end in '\n'. With `perFileTornTail`
+    * any file may tear (WAL directories hold files of several fencing
+    * epochs, each its own append stream); otherwise only the directory's
+    * last file can (journal and tombstones are written strictly in name
+    * order). Any other line that does not parse is real state loss, and
+    * recovery fails loudly instead of skipping it; only parse errors are
+    * caught — a fatal error (OOM) during parse propagates. */
+  private def foreachJsonLine(dir: HPath, perFileTornTail: Boolean)(
+      f: (String, com.fasterxml.jackson.databind.JsonNode) => Unit): Unit = {
     if (!fs.exists(dir)) return
     val files = fs.listStatus(dir).sortBy(_.getPath.getName)
     files.zipWithIndex.foreach { case (st, fi) =>
-      val lastFile = fi == files.length - 1
       val in = fs.open(st.getPath)
       try {
+        val canTear = (perFileTornTail || fi == files.length - 1) && st.getLen > 0 && {
+          val last = new Array[Byte](1)
+          in.readFully(st.getLen - 1, last) // positional: the stream stays at 0
+          last(0) != '\n'
+        }
         val reader = new java.io.BufferedReader(
           new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
         var line = reader.readLine()
         while (line != null) {
-          val next = reader.readLine() // lookahead: is `line` the torn tail?
-          if (line.nonEmpty)
-            parseRecoveryLine(line, st.getPath, isTail = lastFile && next == null).foreach(f)
+          val next = reader.readLine() // lookahead: is `line` the file's last?
+          if (line.nonEmpty) {
+            val node =
+              try Some(Mapper.readTree(line))
+              catch {
+                case e @ (_: com.fasterxml.jackson.core.JacksonException | _: java.io.IOException) =>
+                  if (canTear && next == null) None
+                  else throw new java.io.IOException(
+                    s"corrupt interior line in ${st.getPath} — refusing to recover from partial state", e)
+              }
+            node.foreach(f(st.getPath.getName, _))
+          }
           line = next
         }
       } finally in.close()
     }
   }
 
-  /** Per-file JSON-lines read in file-name order. Torn-final-line
-    * tolerance is scoped by `perFileTornTail`: WAL directories may hold
-    * files of several fencing epochs, EACH an append stream a crash can
-    * tear mid-write (per-file tolerance); journal/tombstone directories
-    * are written strictly in name order, so only the globally-last file
-    * can legitimately tear — a torn earlier file there is real loss and
-    * still fails loudly. One body serves both (r15 review finding #8:
-    * three near-identical read loops had drifted apart). */
-  private def listJsonFiles(dir: HPath, perFileTornTail: Boolean)
-      : Seq[(String, Seq[com.fasterxml.jackson.databind.JsonNode])] = {
-    if (!fs.exists(dir)) return Nil
-    val files = fs.listStatus(dir).sortBy(_.getPath.getName)
-    files.zipWithIndex.map { case (st, fi) =>
-      val lastFile = fi == files.length - 1
-      val in = fs.open(st.getPath)
-      val text = try {
-        val bytes = new Array[Byte](st.getLen.toInt)
-        in.readFully(0, bytes)
-        new String(bytes, StandardCharsets.UTF_8)
-      } finally in.close()
-      val lines = text.split('\n').iterator.filter(_.nonEmpty).toSeq
-      val nodes = lines.zipWithIndex.flatMap { case (line, li) =>
-        parseRecoveryLine(line, st.getPath,
-          isTail = (perFileTornTail || lastFile) &&
-            li == lines.length - 1 && !text.endsWith("\n"))
-      }
-      (st.getPath.getName, nodes)
-    }.toSeq
-  }
-
-  private def listJsonLines(dir: HPath): Seq[com.fasterxml.jackson.databind.JsonNode] =
-    listJsonFiles(dir, perFileTornTail = false).flatMap(_._2)
-
-  private def loadTombstones(): Unit =
-    listJsonLines(new HPath(tombstonesDir)).sortBy(_.get("seq").asLong).foreach { n =>
+  private def loadTombstones(): Unit = {
+    val nodes = mutable.ArrayBuffer.empty[com.fasterxml.jackson.databind.JsonNode]
+    foreachJsonLine(new HPath(tombstonesDir), perFileTornTail = false)((_, n) => nodes += n)
+    nodes.sortBy(_.get("seq").asLong).foreach { n =>
       tombSeq = math.max(tombSeq, n.get("seq").asLong + 1)
       n.get("kind").asText match {
         case "message" => msgTombs += n.get("position").asLong
@@ -1203,13 +1175,14 @@ final class SparkStreamStore(
         case _ => ()
       }
     }
+  }
 
   private def loadJournal(): Unit =
     // Stream the journal in seq order (file names sort by first-seq, lines
     // within a file are seq-ordered), upserting as we go: last writer wins
     // per stream without materializing a map of the whole journal — keeps
     // recovery memory flat when heads are spilled.
-    foreachJsonLine(new HPath(journalDir)) { n =>
+    foreachJsonLine(new HPath(journalDir), perFileTornTail = false) { (_, n) =>
       journalSeq = math.max(journalSeq, n.get("seq").asLong + 1)
       nextPosition = math.max(nextPosition, n.get("nextPosition").asLong)
       val idi = n.get("idInternal")
@@ -1224,7 +1197,7 @@ final class SparkStreamStore(
     }
 
   /** Fold log rows above the journal watermark into the head state: heads
-    * journaled on every rare mutation + every `journalEvery` appends, so
+    * journaled on every rare mutation + every `JournalEvery` appends, so
     * the tail is bounded; with no journal at all this degrades to the
     * full-log scan (the round-1 recovery path). Heads never move backward
     * (deleted tail messages keep their stream's version/position, like the
@@ -1343,6 +1316,19 @@ final class SparkStreamStore(
 }
 
 object SparkStreamStore {
+  /** Appends between two heads-journal writes. */
+  val JournalEvery = 64
+
+  /** Longest id chain a stream keeps cached. */
+  val MaxCachedChain = 100000
+
+  /** Buffered payload bytes that flush the memtable to a segment even
+    * before `flushEveryRows` rows have accumulated. */
+  val FlushEveryBytes: Long = 32L << 20
+
+  /** Writer-lease heartbeat and verification cadence (see [[WriterLease]]). */
+  val LeaseHeartbeatMs = 1000L
+
   /** What one paged read sees, taken under `this` in O(1): the zone map,
     * the memtable and the delete state, all immutable values. The
     * memtable holds exactly the positions `memStart until end`; every

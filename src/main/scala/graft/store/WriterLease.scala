@@ -208,7 +208,7 @@ object WriterLease {
       leaseTimeoutMs: Long,
       heartbeatMs: Long,
       log: org.slf4j.Logger): WriterLease = {
-    require(heartbeatMs >= 1, s"leaseHeartbeatMs must be >= 1: $heartbeatMs")
+    require(heartbeatMs >= 1, s"heartbeatMs must be >= 1: $heartbeatMs")
     // the lock's mutual exclusion rests on atomic exclusive create;
     // object stores implement create(overwrite = false) as
     // check-then-create, so on those roots the exclusivity claim would

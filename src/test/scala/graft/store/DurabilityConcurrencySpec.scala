@@ -119,6 +119,21 @@ class DurabilityConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  test("an unparseable journal line that ends in a newline is corruption, not a torn tail") {
+    val dir = SparkTestSession.tempDir("graft-newlinejournal")
+    val s1 = new SparkStreamStore(spark, dir)
+    (1 to 3).foreach(i => s1.appendToStream(s"s$i", ExpectedVersion.NoStream, msgs(i)))
+    s1.close()
+
+    // every writer ends each line with '\n', so a crash mid-write leaves
+    // a last line WITHOUT one; a complete line that does not parse is loss
+    val latest = new java.io.File(dir, "heads").listFiles().sortBy(_.getName).last
+    java.nio.file.Files.writeString(latest.toPath, "{\"seq\":999,\"streamId\":\"torn\"\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    val e = intercept[java.io.IOException](new SparkStreamStore(spark, dir))
+    assert(e.getMessage.contains("corrupt interior line"))
+  }
+
   test("deleted stream stays deleted across restart; id can be recreated") {
     val dir = SparkTestSession.tempDir("graft-delrestart")
     val s1 = new SparkStreamStore(spark, dir)
