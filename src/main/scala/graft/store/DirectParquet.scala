@@ -3,6 +3,9 @@ package graft.store
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
@@ -10,8 +13,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile, HadoopStreams}
-import org.apache.parquet.io.{ColumnIOFactory, InputFile, RecordReader, SeekableInputStream}
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.io.{InputFile, SeekableInputStream}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
@@ -37,7 +40,8 @@ private[graft] final case class MessageRow(
   * generation — flushed segments and Spark-written compacted files
   * (optional fields, INT96 timestamps from before the store pinned
   * TIMESTAMP_MICROS) — skips row groups and pages whose position stats
-  * miss the predicate, and materializes only the rows that match. */
+  * miss the predicate, decodes column by column, and builds strings and
+  * rows only for the rows that match. */
 private[graft] object DirectParquet {
   import org.apache.parquet.schema.Types.{buildMessage => newSchema}
 
@@ -80,7 +84,6 @@ private[graft] object DirectParquet {
     } finally writer.close()
   }
 
-  /** One log segment with its footer-derived zone map. */
   /** The messages directory of generation `g` under a store root. */
   def generationDir(root: String, g: Long): String =
     if (g == 0L) root + "/messages" else root + s"/messages-g$g"
@@ -122,6 +125,7 @@ private[graft] object DirectParquet {
     }
   }
 
+  /** One log segment with its footer-derived zone map. */
   final case class Segment(path: String, bytes: Long, rows: Long, minPos: Long, maxPos: Long)
 
   /** List the segments of one messages generation and read each footer
@@ -169,65 +173,73 @@ private[graft] object DirectParquet {
 
   private val Position = FilterApi.longColumn("position")
 
+  /** A row filter on position: parquet skips the row groups and pages
+    * whose statistics miss `predicate`, and [[read]] keeps a remaining
+    * row when `keep` accepts its position. */
+  final class PositionFilter private[DirectParquet] (val predicate: FilterPredicate, val keep: Long => Boolean)
+
   /** Rows with `lo <= position <= hi`. */
-  def positionRange(lo: Long, hi: Long): FilterPredicate =
-    FilterApi.and(
-      FilterApi.gtEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(lo)),
-      FilterApi.ltEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(hi)))
+  def positionRange(lo: Long, hi: Long): PositionFilter =
+    new PositionFilter(
+      FilterApi.and(
+        FilterApi.gtEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(lo)),
+        FilterApi.ltEq[java.lang.Long, Operators.LongColumn](Position, java.lang.Long.valueOf(hi))),
+      p => p >= lo && p <= hi)
 
   /** Rows whose position is one of `positions`. */
-  def positionIn(positions: Iterable[Long]): FilterPredicate =
-    FilterApi.in[java.lang.Long, Operators.LongColumn](Position,
-      positions.iterator.map(java.lang.Long.valueOf).toSet.asJava)
+  def positionIn(positions: Iterable[Long]): PositionFilter = {
+    val sorted = positions.toArray.sorted
+    new PositionFilter(
+      FilterApi.in[java.lang.Long, Operators.LongColumn](Position, sorted.iterator.map(java.lang.Long.valueOf).toSet.asJava),
+      p => java.util.Arrays.binarySearch(sorted, p) >= 0)
+  }
 
   /** A decoded segment: rows in file order, closed by the caller. */
   trait Rows extends Iterator[MessageRow] with AutoCloseable
 
   /** Decode the `columns` of one segment (columns absent from the file
-    * and unprojected ones come back null / 0), keeping rows that match
-    * `filter`. `conf` is the caller's long-lived configuration: the read
-    * options are derived from it per open (they own a codec factory that
-    * closing the reader releases), never from a freshly loaded Hadoop
-    * configuration, which re-parses its resource files. */
+    * and unprojected ones come back null / 0; a filtered read also
+    * decodes `position`), keeping rows that match `filter`. `conf` is the
+    * caller's long-lived configuration: the read options are derived from
+    * it per open (they own a codec factory that closing the reader
+    * releases), never from a freshly loaded Hadoop configuration, which
+    * re-parses its resource files. */
   def read(conf: Configuration, file: InputFile, columns: Seq[String],
-      filter: Option[FilterPredicate]): Rows = {
-    val compat = filter.map(FilterCompat.get).getOrElse(FilterCompat.NOOP)
+      filter: Option[PositionFilter]): Rows = {
+    val compat = filter.map(f => FilterCompat.get(f.predicate)).getOrElse(FilterCompat.NOOP)
     val options = HadoopReadOptions.builder(conf).withRecordFilter(compat).build()
     val reader = ParquetFileReader.open(file, options)
     try {
       val meta = reader.getFooter.getFileMetaData
       val fileSchema = meta.getSchema
-      val projection = projectionOf(fileSchema, columns.filter(fileSchema.containsField))
+      val wanted = (if (filter.isDefined) columns :+ "position" else columns).distinct
+      val projection = projectionOf(fileSchema, wanted.filter(fileSchema.containsField))
       reader.setRequestedSchema(projection)
-      val columnIO = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(projection, fileSchema, true)
+      val rowFilter = filter // `filter` is Iterator's inside Rows
       new Rows {
-        private var records: RecordReader[MessageRow] = _
-        private var left = 0L
-        private var nextRow: MessageRow = _
+        private var group: RowGroup = _
+        private var batch = Array.empty[MessageRow]
+        private var i = 0
         private var done = false
 
         override def hasNext: Boolean = {
-          while (nextRow == null && !done) {
-            if (left > 0) {
-              left -= 1
-              nextRow = records.read() // null: filtered out
+          while (i == batch.length && !done) {
+            if (group != null && group.left > 0) {
+              batch = group.nextBatch()
+              i = 0
             } else {
               val pages = reader.readNextFilteredRowGroup()
               if (pages == null) done = true
-              else {
-                records = columnIO.getRecordReader(pages, new RowMaterializer(projection), compat)
-                left = pages.getRowCount
-              }
+              else group = new RowGroup(pages, projection, meta.getCreatedBy, rowFilter)
             }
           }
-          nextRow != null
+          i < batch.length
         }
 
         override def next(): MessageRow = {
           if (!hasNext) throw new NoSuchElementException
-          val r = nextRow
-          nextRow = null
-          r
+          i += 1
+          batch(i - 1)
         }
 
         override def close(): Unit = reader.close()
@@ -244,55 +256,95 @@ private[graft] object DirectParquet {
     new MessageType(fileSchema.getName,
       columns.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
 
-  /** Builds a [[MessageRow]] per record straight from the column values. */
-  private final class RowMaterializer(schema: MessageType) extends RecordMaterializer[MessageRow] {
-    private var streamId, messageId, tpe, jsonData, jsonMetadata: String = _
-    private var version = 0
-    private var position, created = 0L
+  /** Input rows one decode step reads per column: bounds the rows held
+    * at once for a whole-file scan. */
+  private val BatchRows = 1024
 
-    private def string(set: String => Unit): Converter = new PrimitiveConverter {
-      override def addBinary(v: Binary): Unit = set(v.toStringUsingUTF8)
+  /** One row group read column by column: the position column first,
+    * which decides the kept rows, then every other column, skipping the
+    * values of dropped rows undecoded — only kept rows get strings and a
+    * [[MessageRow]]. Every column is a flat required or optional field,
+    * so each row holds exactly one value (or null) per column. */
+  private final class RowGroup(pages: PageReadStore, projection: MessageType, createdBy: String,
+      filter: Option[PositionFilter]) {
+    private val store = new ColumnReadStoreImpl(pages, IgnoreValues, projection, createdBy)
+    private def column(name: String): ColumnReader =
+      if (projection.containsField(name)) store.getColumnReader(projection.getColumnDescription(Array(name)))
+      else null
+    private val streamId = column("streamId")
+    private val messageId = column("messageId")
+    private val version = column("streamVersion")
+    private val position = column("position")
+    private val created = column("createdUtc")
+    private val tpe = column("type")
+    private val jsonData = column("jsonData")
+    private val jsonMetadata = column("jsonMetadata")
+    private val int96 = created != null &&
+      created.getDescriptor.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT96
+
+    /** Rows of the group not yet read. */
+    var left: Long = pages.getRowCount
+
+    def nextBatch(): Array[MessageRow] = {
+      val n = math.min(left, BatchRows.toLong).toInt
+      left -= n
+      val allPos = new Array[Long](n)
+      scan(position, null, n)(k => allPos(k) = position.getLong)
+      val keep = filter.map(f => Array.tabulate(n)(i => f.keep(allPos(i)))).orNull
+      val pos = if (keep == null) allPos else allPos.indices.iterator.filter(i => keep(i)).map(i => allPos(i)).toArray
+      val kept = pos.length
+      def strings(r: ColumnReader): Array[String] = {
+        val out = new Array[String](kept)
+        scan(r, keep, n)(k => out(k) = r.getBinary.toStringUsingUTF8)
+        out
+      }
+      val versions = new Array[Int](kept)
+      scan(version, keep, n)(k => versions(k) = version.getInteger)
+      val micros = new Array[Long](kept)
+      scan(created, keep, n)(k => micros(k) = if (int96) int96Micros(created.getBinary) else created.getLong)
+      val sids = strings(streamId)
+      val mids = strings(messageId)
+      val types = strings(tpe)
+      val data = strings(jsonData)
+      val meta = strings(jsonMetadata)
+      Array.tabulate(kept)(k => MessageRow(sids(k), mids(k), versions(k), pos(k), micros(k), types(k), data(k), meta(k)))
     }
 
-    private val converters: Array[Converter] = schema.getFields.asScala.map { f =>
-      f.getName match {
-        case "streamId" => string(streamId = _)
-        case "messageId" => string(messageId = _)
-        case "type" => string(tpe = _)
-        case "jsonData" => string(jsonData = _)
-        case "jsonMetadata" => string(jsonMetadata = _)
-        case "streamVersion" => new PrimitiveConverter {
-          override def addInt(v: Int): Unit = version = v
+    /** Advance `r` (absent: nothing to read) over the next `n` rows, calling
+      * `take(k)` with the reader on the k-th kept row's non-null value;
+      * every other value is skipped undecoded. `keep == null` keeps all. */
+    private def scan(r: ColumnReader, keep: Array[Boolean], n: Int)(take: Int => Unit): Unit =
+      if (r != null) {
+        val maxDef = r.getDescriptor.getMaxDefinitionLevel
+        var i = 0
+        var k = 0
+        while (i < n) {
+          val present = r.getCurrentDefinitionLevel == maxDef
+          if (keep == null || keep(i)) {
+            if (present) take(k)
+            k += 1
+          } else if (present) r.skip()
+          r.consume()
+          i += 1
         }
-        case "position" => new PrimitiveConverter {
-          override def addLong(v: Long): Unit = position = v
-        }
-        case "createdUtc" => new PrimitiveConverter {
-          override def addLong(v: Long): Unit = created = v
-          // generations Spark compacted under its default INT96 encoding
-          // carry a 12-byte julian-day value: 8B nanos-of-day, 4B day (LE)
-          override def addBinary(v: Binary): Unit = {
-            val buf = v.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanosOfDay = buf.getLong
-            val julianDay = buf.getInt
-            created = (julianDay - 2440588L) * 86400L * 1000000L + nanosOfDay / 1000L
-          }
-        }
-        case other => throw new IllegalArgumentException(s"not a message-log column: $other")
       }
-    }.toArray
+  }
 
-    private val root = new GroupConverter {
-      override def getConverter(i: Int): Converter = converters(i)
-      override def start(): Unit = {
-        streamId = null; messageId = null; tpe = null; jsonData = null; jsonMetadata = null
-        version = 0; position = 0L; created = 0L
-      }
-      override def end(): Unit = ()
-    }
+  /** Generations Spark compacted under its default INT96 encoding carry a
+    * 12-byte julian-day value: 8B nanos-of-day, 4B day (little-endian). */
+  private def int96Micros(v: Binary): Long = {
+    val buf = v.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val nanosOfDay = buf.getLong
+    val julianDay = buf.getInt
+    (julianDay - 2440588L) * 86400L * 1000000L + nanosOfDay / 1000L
+  }
 
-    override def getRootConverter: GroupConverter = root
-    override def getCurrentRecord: MessageRow =
-      MessageRow(streamId, messageId, version, position, created, tpe, jsonData, jsonMetadata)
+  /** The converter tree `ColumnReadStoreImpl` asks for: values are read
+    * from the column readers directly, never pushed to a converter. */
+  private object IgnoreValues extends GroupConverter {
+    private val ignore = new PrimitiveConverter {}
+    override def getConverter(i: Int): Converter = ignore
+    override def start(): Unit = ()
+    override def end(): Unit = ()
   }
 }

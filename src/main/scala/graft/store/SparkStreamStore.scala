@@ -5,7 +5,6 @@ import graft.core._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,8 +12,10 @@ import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicLong
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Stream store over an append-only parquet log. The store contract
   * itself (expected versions, idempotent replays, deletes, metadata and
@@ -194,6 +195,18 @@ final class SparkStreamStore(
     if (old != null) chainCacheEntries -= old.length
   }
 
+  /** The segment rows stream reads decoded, by position: at most one
+    * group-commit window of them, under the memtable's bounds
+    * (`flushEveryRows` rows, [[FlushEveryBytes]] of estimated size). Only
+    * [[chainRows]] fills it; [[compact]] clears it and the delete
+    * primitives drop the positions they hide, O(deleted rows) each. */
+  private val rowCache = new RowCache(flushEveryRows, FlushEveryBytes)
+
+  /** Stream-read counters of the row cache, for tests and tracing. */
+  private[graft] def readStats: ReadStats = rowCache.stats
+
+  private[store] def cachedPositions: Set[Long] = rowCache.positions
+
   private val dirtyStreams = mutable.LinkedHashSet.empty[String]
   private var appendsSinceJournal = 0
   private var journalDue = false // a retention change waits for the end of its write section
@@ -328,7 +341,11 @@ final class SparkStreamStore(
       val asOf = nextPosition - 1
       cutoffs += streamId -> (ceiling, asOf)
       pendingCutoffs(streamId) = Tomb("cutoff", streamId, -1L, ceiling, asOf)
-      chainGet(streamId).foreach(c => cacheChain(streamId, c.filter(_._1 > ceiling)))
+      chainGet(streamId).foreach { c =>
+        val (gone, kept) = c.partition(_._1 <= ceiling)
+        cacheChain(streamId, kept)
+        rowCache.drop(gone.map(_._3))
+      }
     }
 
   private def cacheChain(streamId: String, chain: IndexedSeq[(Int, String, Long)]): Unit = {
@@ -346,11 +363,6 @@ final class SparkStreamStore(
       }
     }
   }
-
-  private def estimatedBytes(r: MessageRow): Long =
-    64L + r.streamId.length + r.messageId.length + r.`type`.length +
-      (if (r.jsonData == null) 0 else r.jsonData.length) +
-      (if (r.jsonMetadata == null) 0 else r.jsonMetadata.length)
 
   /** Durability write: serialize the batch as JSON lines into the open WAL
     * file and flush once. The stream stays open across appends — the whole
@@ -559,6 +571,7 @@ final class SparkStreamStore(
     if (fresh.nonEmpty) {
       writeTombstones(fresh.map(m => Tomb("message", null, m.position, -1, -1L)))
       msgTombs ++= fresh.map(_.position)
+      rowCache.drop(fresh.map(_.position))
       fresh.groupBy(_.streamId).foreach { case (sid, ms) =>
         val ids = ms.map(_.messageId).toSet
         chainGet(sid).foreach(c => cacheChain(sid, c.filterNot(p => ids.contains(p._2))))
@@ -575,11 +588,10 @@ final class SparkStreamStore(
   private def readView(): ReadView =
     new ReadView(segments, memtable, nextPosition, streamTombs, msgTombs, cutoffs)
 
-  /** Decode the rows matching `filter` from every segment `touches`
-    * selects, in position order. Runs outside `this`. */
+  /** Decode `columns` of the rows matching `filter` from every segment
+    * `touches` selects, in position order. Runs outside `this`. */
   private def segmentRows(view: ReadView, touches: DirectParquet.Segment => Boolean,
-      filter: FilterPredicate, prefetch: Boolean): collection.IndexedSeq[MessageRow] = {
-    val columns = if (prefetch) DirectParquet.AllColumns else DirectParquet.AllColumns.filterNot(_ == "jsonData")
+      filter: DirectParquet.PositionFilter, columns: Seq[String]): collection.IndexedSeq[MessageRow] = {
     val hits = view.segments.filter(s => s.rows > 0 && touches(s))
     val out = mutable.ArrayBuffer.empty[MessageRow]
     hits.foreach { s =>
@@ -592,7 +604,8 @@ final class SparkStreamStore(
   }
 
   private def rangeRows(view: ReadView, lo: Long, hi: Long, prefetch: Boolean): collection.IndexedSeq[MessageRow] =
-    segmentRows(view, s => s.maxPos >= lo && s.minPos <= hi, DirectParquet.positionRange(lo, hi), prefetch)
+    segmentRows(view, s => s.maxPos >= lo && s.minPos <= hi, DirectParquet.positionRange(lo, hi),
+      if (prefetch) DirectParquet.AllColumns else PayloadlessColumns)
 
   /** The first `want` visible rows at positions >= `from`, ascending.
     * Positions are dense, so a window of `want` positions usually holds
@@ -697,18 +710,39 @@ final class SparkStreamStore(
     lo
   }
 
-  /** The rows behind `entries` of `s.chain`, in entry order. The chain
-    * holds exactly the stream's visible rows, so a position found in
-    * neither the memtable nor a segment is corruption, not a delete. */
-  private def chainRows(s: StreamView, entries: Seq[(Int, String, Long)], prefetch: Boolean): Seq[MessageRow] = {
+  /** The rows behind `entries` of `s.chain`, in entry order: from the
+    * memtable, the row cache, and else decoded from the segments. The
+    * chain already knows each row's stream, version and message id, so
+    * only the other columns are decoded, and a cached row shares the
+    * chain's message id string. Only a read that decodes `jsonData`
+    * fills the cache, so a cached row always carries it. The chain holds
+    * exactly the stream's visible rows, so a position found in neither
+    * the memtable nor a segment is corruption, not a delete. */
+  private def chainRows(streamId: String, s: StreamView, entries: Seq[(Int, String, Long)],
+      prefetch: Boolean): Seq[MessageRow] = {
     val view = s.view
-    val (inMem, inSeg) = entries.map(_._3).partition(_ >= view.memStart)
+    val (inMem, inSeg) = entries.partition(_._3 >= view.memStart)
     val byPos = mutable.HashMap.empty[Long, MessageRow]
-    inMem.foreach(p => byPos(p) = view.memtable((p - view.memStart).toInt))
+    inMem.foreach { case (_, _, p) => byPos(p) = view.memtable((p - view.memStart).toInt) }
     if (inSeg.nonEmpty) {
-      val wanted = inSeg.toSet
-      segmentRows(view, seg => inSeg.exists(p => p >= seg.minPos && p <= seg.maxPos),
-        DirectParquet.positionIn(wanted), prefetch).foreach(r => byPos(r.position) = r)
+      byPos ++= rowCache.lookup(inSeg.map(_._3))
+      val missing = inSeg.filterNot(e => byPos.contains(e._3))
+      val decoded =
+        if (missing.isEmpty) Nil
+        else {
+          val wanted = missing.map(_._3)
+          val ids = missing.iterator.map(e => e._3 -> e).toMap
+          val rows = segmentRows(view, seg => wanted.exists(p => p >= seg.minPos && p <= seg.maxPos),
+            DirectParquet.positionIn(wanted), if (prefetch) StreamColumns :+ "jsonData" else StreamColumns
+          ).map { r =>
+            val (v, id, _) = ids(r.position)
+            r.copy(streamId = streamId, messageId = id, streamVersion = v)
+          }
+          rows.foreach(r => byPos(r.position) = r)
+          if (prefetch) rowCache.add(rows)
+          rows
+        }
+      rowCache.countRead(missing.nonEmpty, decoded.length)
     }
     entries.map { case (_, _, p) =>
       byPos.getOrElse(p, throw new IllegalStateException(s"$root: position $p of the id chain is in no segment"))
@@ -729,6 +763,7 @@ final class SparkStreamStore(
 
   override protected def fetchStream(streamId: String, from: Int, n: Int, direction: ReadDirection,
       prefetch: Boolean): Option[StreamRows] = withReadLock {
+    rowCache.countStreamRead()
     streamView(streamId).map { s =>
       val entries =
         if (direction == ReadDirection.Forward) {
@@ -739,7 +774,7 @@ final class SparkStreamStore(
           s.chain.slice(math.max(0L, top.toLong - n).toInt, top).reverse
         }
       StreamRows(s.version, s.position,
-        chainRows(s, entries, prefetch).map(r => PageRow(toMessage(r, prefetch), s.maxAge)).toIndexedSeq)
+        chainRows(streamId, s, entries, prefetch).map(r => PageRow(toMessage(r, prefetch), s.maxAge)).toIndexedSeq)
     }
   }
 
@@ -771,7 +806,10 @@ final class SparkStreamStore(
       cutoffs -= id; pendingCutoffs.remove(id)
     }
     writeJournal(Nil, ids)
-    ids.foreach { id => heads.remove(id); chainRemove(id); dirtyStreams -= id }
+    ids.foreach { id =>
+      chainGet(id).foreach(c => rowCache.drop(c.map(_._3)))
+      heads.remove(id); chainRemove(id); dirtyStreams -= id
+    }
   }
 
   /** The row's position comes from the id chain (cached after any append
@@ -783,6 +821,7 @@ final class SparkStreamStore(
         writeTombstones(Seq(Tomb("message", null, pos, -1, -1L)))
         msgTombs += pos
         chainGet(streamId).foreach(c => cacheChain(streamId, c.filterNot(_._2 == messageId)))
+        rowCache.drop(Seq(pos))
         true
     }
 
@@ -852,6 +891,7 @@ final class SparkStreamStore(
       val oldGen = gen
       gen = newGen
       loadZoneMap()
+      rowCache.clear()
       if (oldGen >= 1) fs.delete(new HPath(DirectParquet.generationDir(root, oldGen - 1)), true)
       // tombstones are merged; clearing them after the flip is safe because
       // re-applying a tombstone to the compacted log matches nothing
@@ -1359,6 +1399,82 @@ object SparkStreamStore {
 
   /** Largest position window one paged-read step decodes. */
   private val MaxWindow = 1L << 20
+
+  private val PayloadlessColumns = DirectParquet.AllColumns.filterNot(_ == "jsonData")
+
+  /** A row's heap estimate, which both the memtable's and the row cache's
+    * byte bounds count. */
+  private def estimatedBytes(r: MessageRow): Long =
+    64L + r.streamId.length + r.messageId.length + r.`type`.length +
+      (if (r.jsonData == null) 0 else r.jsonData.length) +
+      (if (r.jsonMetadata == null) 0 else r.jsonMetadata.length)
+
+  /** The columns a stream read decodes besides `jsonData`: its id chain
+    * supplies the rest. */
+  private val StreamColumns = Seq("position", "createdUtc", "type", "jsonMetadata")
+
+  /** Stream-read counters. A read that needs segment rows is a hit when
+    * the cache holds all of them and a miss when it decodes some; a read
+    * served by the memtable alone is neither. `rowsDecoded` counts the
+    * segment rows stream reads decoded, `evictions` the rows the cache
+    * dropped for its bounds, and `cachedRows` / `cachedBytes` are its
+    * size now (bytes as [[estimatedBytes]] counts them). */
+  private[graft] final case class ReadStats(streamReads: Long, hits: Long, misses: Long, evictions: Long,
+      rowsDecoded: Long, cachedRows: Int, cachedBytes: Long)
+
+  /** Position-keyed LRU of segment rows: at most `capacity` rows and
+    * `maxBytes` of them. A read whose decoded rows alone would reach
+    * either bound is not cached, so one large read cannot empty the cache
+    * of every other stream's rows. A position is never reused and the row
+    * at it never changes, so an entry can go unused but never stale: a
+    * delete drops the positions its stream's cached id chain lists to free
+    * memory (rows of a stream whose chain is not cached age out), and the
+    * read's own visibility check hides the row. Its lock is the innermost
+    * one, held only for map operations. */
+  private final class RowCache(capacity: Int, maxBytes: Long) {
+    private val rows = new java.util.LinkedHashMap[java.lang.Long, MessageRow](256, 0.75f, true)
+    private var bytes = 0L
+    private var evictions = 0L
+    private val streamReads, hits, misses, rowsDecoded = new AtomicLong
+
+    def lookup(positions: Seq[Long]): Seq[(Long, MessageRow)] = synchronized {
+      positions.flatMap(p => Option(rows.get(p)).map(p -> _))
+    }
+
+    def add(rs: collection.Seq[MessageRow]): Unit = {
+      val size = rs.iterator.map(estimatedBytes).sum
+      if (rs.length < capacity && size < maxBytes) synchronized {
+        rs.foreach(r => forget(rows.put(r.position, r)))
+        bytes += size
+        val it = rows.values.iterator
+        while (rows.size > capacity || bytes > maxBytes) { forget(it.next()); it.remove(); evictions += 1 }
+      }
+    }
+
+    def drop(positions: Iterable[Long]): Unit = synchronized {
+      positions.foreach(p => forget(rows.remove(p)))
+    }
+
+    def clear(): Unit = synchronized { rows.clear(); bytes = 0L }
+
+    /** Account for `r` (null: nothing) leaving the map. */
+    private def forget(r: MessageRow): Unit = if (r != null) bytes -= estimatedBytes(r)
+
+    def positions: Set[Long] = synchronized(rows.keySet.asScala.map(_.longValue).toSet)
+
+    /** One stream read that needed segment rows, `missed` some in the
+      * cache and decoded `decoded`. */
+    def countRead(missed: Boolean, decoded: Int): Unit = {
+      (if (missed) misses else hits).incrementAndGet()
+      rowsDecoded.addAndGet(decoded)
+    }
+
+    def countStreamRead(): Unit = streamReads.incrementAndGet()
+
+    def stats: ReadStats = synchronized {
+      ReadStats(streamReads.get, hits.get, misses.get, evictions, rowsDecoded.get, rows.size, bytes)
+    }
+  }
 
   private def timestampOf(micros: Long): java.sql.Timestamp = {
     val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
