@@ -4,6 +4,8 @@ import graft.store.{DirectParquet, MessageRow}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
@@ -13,6 +15,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.util.{Map => JMap, OptionalLong}
 import scala.jdk.CollectionConverters._
@@ -23,15 +26,15 @@ import scala.jdk.CollectionConverters._
   * the pushdowns a 100 TB log needs:
   *
   *   - '''planning-time segment pruning''': every segment is position-
-  *     sorted (flushed group-commit windows are written at
-  *     `part-<startPosition>-*`, `SparkStreamStore.scala:432`; compacted
-  *     generations are `repartitionByRange(position)`,
-  *     `SparkStreamStore.scala:849-851`), so one footer-stats read per
-  *     file at plan time yields an exact `[minPos, maxPos]` zone map and
-  *     position-range predicates drop whole segments before any task is
-  *     scheduled. A tail read of a year-long log plans O(tail) partitions,
-  *     not O(log) — the DSv2 twin of the keyset page reads (SURVEY §2.1
-  *     #1-4, ref `ReadAll.sql:35-40`).
+  *     sorted (`SparkStreamStore.flushMemtable` writes each group-commit
+  *     window at `part-<startPosition>-*`; `SparkStreamStore.compact`
+  *     range-partitions its generation on position by default), so one
+  *     footer-stats read per file at plan time yields an exact
+  *     `[minPos, maxPos]` zone map and position-range predicates drop
+  *     whole segments before any task is scheduled. A tail read of a
+  *     year-long log plans O(tail) partitions, not O(log) — the DSv2 twin
+  *     of the keyset page reads (SURVEY §2.1 #1-4, ref
+  *     `ReadAll.sql:35-40`).
   *   - '''column pruning''' pushed into the parquet record reader
   *     (`jsonData` payloads never leave the file for metadata-only scans —
   *     the DSv2 twin of `prefetchJsonData=false`, SURVEY §2.1 #5, ref
@@ -46,10 +49,9 @@ import scala.jdk.CollectionConverters._
   * stays in codegen while file skipping happens here — the same contract
   * parquet zone maps give the built-in reader, lifted to whole segments.
   *
-  * Deletes are logical in this store (tombstones applied by `allMessages`
-  * / the read API); like `allMessagesStream`, this table exposes the
-  * append-only physical log. Join `store.streamsDF` / apply tombstones for
-  * the delete-aware view.
+  * Deletes are logical in this store (tombstones applied by the read
+  * API and by `allMessages`, which reads this table and filters it); like
+  * `allMessagesStream`, this table exposes the append-only physical log.
   *
   * Usage:
   * {{{
@@ -69,10 +71,6 @@ class LogSegmentSource extends TableProvider {
 
 object LogSegmentSource {
   val Schema: StructType = graft.store.SparkStreamStore.MessageSchema
-
-  /** One Hadoop configuration per JVM for footer and segment reads, so
-    * opening a file never re-parses the configuration resources. */
-  private[sources] lazy val conf: Configuration = new Configuration()
 
   /** The inclusive position interval implied by the pushable filters. */
   private[sources] def positionBounds(filters: Seq[Filter]): (Long, Long) = {
@@ -140,9 +138,11 @@ private class LogSegmentScanBuilder(root: String)
   private var limit: Int = -1
   private var aggSchema: Option[StructType] = None
 
-  // one metadata pass per query planning, shared with the scan
+  // one metadata pass per query planning, shared with the scan; its
+  // readers get the same configuration, the one `spark.read.parquet`
+  // would use (the context's, plus the session's SQL settings)
+  private lazy val conf: Configuration = SparkSession.active.sessionState.newHadoopConf()
   private lazy val allSegments: Seq[DirectParquet.Segment] = {
-    val conf = LogSegmentSource.conf
     val fs = new HPath(root).getFileSystem(conf)
     DirectParquet.listSegments(conf, DirectParquet.generationDir(root, DirectParquet.liveGeneration(fs, root)))
   }
@@ -181,11 +181,12 @@ private class LogSegmentScanBuilder(root: String)
   }
 
   override def build(): Scan =
-    new LogSegmentScan(root, allSegments, required, pushed, limit, aggSchema)
+    new LogSegmentScan(root, conf, allSegments, required, pushed, limit, aggSchema)
 }
 
 private class LogSegmentScan(
     root: String,
+    conf: Configuration,
     allSegments: Seq[DirectParquet.Segment],
     required: StructType,
     pushed: Array[Filter],
@@ -230,7 +231,11 @@ private class LogSegmentScan(
       segments.map(s => LogSegmentPartition(s.path, s.bytes, required.fieldNames, limit): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new LogSegmentReaderFactory
+  // broadcast, as Spark's own file scans do: a broadcast value is
+  // deserialized once per executor, the task binary by every task (~10 ms
+  // for the ~1,100 keys of a default configuration)
+  override def createReaderFactory(): PartitionReaderFactory =
+    new LogSegmentReaderFactory(SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf)))
 }
 
 private case class LogSegmentPartition(path: String, bytes: Long, columns: Array[String], limit: Int)
@@ -242,7 +247,7 @@ private case class LogFooterAggPartition(
     fields: Array[String], minPos: java.lang.Long, maxPos: java.lang.Long, rows: Long)
   extends InputPartition
 
-private class LogSegmentReaderFactory extends PartitionReaderFactory {
+private class LogSegmentReaderFactory(conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
     case a: LogFooterAggPartition => new PartitionReader[InternalRow] {
       private var done = false
@@ -263,9 +268,9 @@ private class LogSegmentReaderFactory extends PartitionReaderFactory {
     * columns. */
   private def createRowReader(p: LogSegmentPartition): PartitionReader[InternalRow] = {
     val path = new HPath(p.path)
-    val conf = LogSegmentSource.conf
-    val rows = DirectParquet.read(conf,
-      DirectParquet.inputFile(path.getFileSystem(conf), path, p.bytes), p.columns.toSeq, None)
+    val hconf = conf.value.value
+    val rows = DirectParquet.read(hconf,
+      DirectParquet.inputFile(path.getFileSystem(hconf), path, p.bytes), p.columns.toSeq, None)
 
     new PartitionReader[InternalRow] {
       private var current: MessageRow = _

@@ -35,13 +35,14 @@ private[graft] final case class MessageRow(
   * (INT64 TIMESTAMP(MICROS, UTC) for createdUtc).
   *
   * [[listSegments]] reads the footers into a position zone map and
-  * [[read]] is the one segment decoder: the store's paged reads and the
-  * `LogSegmentSource` DSv2 reader both go through it. It reads any
-  * generation — flushed segments and Spark-written compacted files
-  * (optional fields, INT96 timestamps from before the store pinned
-  * TIMESTAMP_MICROS) — skips row groups and pages whose position stats
-  * miss the predicate, decodes column by column, and builds strings and
-  * rows only for the rows that match. */
+  * [[read]] is the one segment decoder: the store's paged reads, its
+  * cold id-chain loads and recovery, and the `LogSegmentSource` DSv2
+  * reader all go through it. It reads any generation — flushed segments
+  * and Spark-written compacted files (optional fields, INT96 timestamps
+  * from before the store pinned TIMESTAMP_MICROS) — skips row groups and
+  * pages whose statistics miss the filter (a position range or set, or
+  * one stream id), decodes column by column, and builds strings and rows
+  * only for the rows that match. */
 private[graft] object DirectParquet {
   import org.apache.parquet.schema.Types.{buildMessage => newSchema}
 
@@ -172,11 +173,23 @@ private[graft] object DirectParquet {
   }
 
   private val Position = FilterApi.longColumn("position")
+  private val StreamIdColumn = FilterApi.binaryColumn("streamId")
 
-  /** A row filter on position: parquet skips the row groups and pages
-    * whose statistics miss `predicate`, and [[read]] keeps a remaining
-    * row when `keep` accepts its position. */
-  final class PositionFilter private[DirectParquet] (val predicate: FilterPredicate, val keep: Long => Boolean)
+  /** A row filter on one column: parquet skips the row groups and pages
+    * whose statistics (or dictionary) miss `predicate`, and [[read]]
+    * decodes `column` first and keeps a remaining row when its value
+    * matches. */
+  sealed abstract class RowFilter private[DirectParquet] (val predicate: FilterPredicate, val column: String)
+
+  /** Rows whose position `keep` accepts. */
+  final class PositionFilter private[DirectParquet] (predicate: FilterPredicate, val keep: Long => Boolean)
+    extends RowFilter(predicate, "position")
+
+  /** Rows of one stream. */
+  final class StreamFilter private[DirectParquet] (val streamId: String, val bytes: Binary)
+    extends RowFilter(FilterApi.eq[Binary, Operators.BinaryColumn](StreamIdColumn, bytes), "streamId")
+
+  def streamIs(streamId: String): StreamFilter = new StreamFilter(streamId, Binary.fromString(streamId))
 
   /** Rows with `lo <= position <= hi`. */
   def positionRange(lo: Long, hi: Long): PositionFilter =
@@ -199,20 +212,20 @@ private[graft] object DirectParquet {
 
   /** Decode the `columns` of one segment (columns absent from the file
     * and unprojected ones come back null / 0; a filtered read also
-    * decodes `position`), keeping rows that match `filter`. `conf` is the
-    * caller's long-lived configuration: the read options are derived from
-    * it per open (they own a codec factory that closing the reader
-    * releases), never from a freshly loaded Hadoop configuration, which
-    * re-parses its resource files. */
+    * decodes the filter's column), keeping rows that match `filter`.
+    * `conf` is the caller's long-lived configuration: the read options
+    * are derived from it per open (they own a codec factory that closing
+    * the reader releases), never from a freshly loaded Hadoop
+    * configuration, which re-parses its resource files. */
   def read(conf: Configuration, file: InputFile, columns: Seq[String],
-      filter: Option[PositionFilter]): Rows = {
+      filter: Option[RowFilter]): Rows = {
     val compat = filter.map(f => FilterCompat.get(f.predicate)).getOrElse(FilterCompat.NOOP)
     val options = HadoopReadOptions.builder(conf).withRecordFilter(compat).build()
     val reader = ParquetFileReader.open(file, options)
     try {
       val meta = reader.getFooter.getFileMetaData
       val fileSchema = meta.getSchema
-      val wanted = (if (filter.isDefined) columns :+ "position" else columns).distinct
+      val wanted = (columns ++ filter.map(_.column)).distinct
       val projection = projectionOf(fileSchema, wanted.filter(fileSchema.containsField))
       reader.setRequestedSchema(projection)
       val rowFilter = filter // `filter` is Iterator's inside Rows
@@ -260,13 +273,13 @@ private[graft] object DirectParquet {
     * at once for a whole-file scan. */
   private val BatchRows = 1024
 
-  /** One row group read column by column: the position column first,
+  /** One row group read column by column: the filter's column first,
     * which decides the kept rows, then every other column, skipping the
     * values of dropped rows undecoded — only kept rows get strings and a
     * [[MessageRow]]. Every column is a flat required or optional field,
     * so each row holds exactly one value (or null) per column. */
   private final class RowGroup(pages: PageReadStore, projection: MessageType, createdBy: String,
-      filter: Option[PositionFilter]) {
+      filter: Option[RowFilter]) {
     private val store = new ColumnReadStoreImpl(pages, IgnoreValues, projection, createdBy)
     private def column(name: String): ColumnReader =
       if (projection.containsField(name)) store.getColumnReader(projection.getColumnDescription(Array(name)))
@@ -288,10 +301,22 @@ private[graft] object DirectParquet {
     def nextBatch(): Array[MessageRow] = {
       val n = math.min(left, BatchRows.toLong).toInt
       left -= n
-      val allPos = new Array[Long](n)
-      scan(position, null, n)(k => allPos(k) = position.getLong)
-      val keep = filter.map(f => Array.tabulate(n)(i => f.keep(allPos(i)))).orNull
-      val pos = if (keep == null) allPos else allPos.indices.iterator.filter(i => keep(i)).map(i => allPos(i)).toArray
+      def positions(keep: Array[Boolean]): Array[Long] = {
+        val out = new Array[Long](if (keep == null) n else keep.count(identity))
+        scan(position, keep, n)(k => out(k) = position.getLong)
+        out
+      }
+      val (keep, pos) = filter match {
+        case Some(f: StreamFilter) =>
+          val keep = new Array[Boolean](n)
+          scan(streamId, null, n)(k => keep(k) = streamId.getBinary == f.bytes)
+          (keep, positions(keep))
+        case Some(f: PositionFilter) =>
+          val all = positions(null)
+          val keep = all.map(f.keep)
+          (keep, all.indices.iterator.filter(i => keep(i)).map(i => all(i)).toArray)
+        case None => (null, positions(null))
+      }
       val kept = pos.length
       def strings(r: ColumnReader): Array[String] = {
         val out = new Array[String](kept)
@@ -302,7 +327,10 @@ private[graft] object DirectParquet {
       scan(version, keep, n)(k => versions(k) = version.getInteger)
       val micros = new Array[Long](kept)
       scan(created, keep, n)(k => micros(k) = if (int96) int96Micros(created.getBinary) else created.getLong)
-      val sids = strings(streamId)
+      val sids = filter match {
+        case Some(f: StreamFilter) => Array.fill(kept)(f.streamId) // its column is read
+        case _ => strings(streamId)
+      }
       val mids = strings(messageId)
       val types = strings(tpe)
       val data = strings(jsonData)

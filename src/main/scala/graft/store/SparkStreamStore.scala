@@ -55,24 +55,26 @@ import scala.jdk.CollectionConverters._
   * positions of its visible messages — then decodes its O(page) rows
   * outside the lock, from the memtable and from the parquet segments the
   * zone map names ([[DirectParquet.read]]), so subscription polling does
-  * not contend with appends. A cold chain costs one Spark query, also
-  * outside the lock. Spark serves the analytical surfaces
-  * ([[allMessages]], `LogSegmentSource`, [[allMessagesStream]]). Only
-  * [[compact]] (which swaps files) excludes readers, via a read-write
-  * structure lock. Across processes an exclusive [[WriterLease]]
-  * (`<root>/LOCK`, heartbeat + fencing epoch) guards the log: a second
-  * store opening the same root fails loudly (strict mode, the default —
-  * a healthy live writer is never fenced) or, under explicit takeover
-  * opt-in (`leaseTimeoutMs = 0`), fences this one; a fenced writer
-  * refuses every mutation instead of interleaving appends into the
-  * winner's log.
+  * not contend with appends. A cold chain is decoded the same way, from
+  * the segments' id columns. Spark serves the analytical surfaces
+  * ([[allMessages]], `LogSegmentSource`, [[allMessagesStream]]) and
+  * [[compact]]; every delete-aware surface applies one visibility rule,
+  * `ReadView.visible`. Only [[compact]] (which swaps files) excludes
+  * readers, via a read-write structure lock. Across processes an
+  * exclusive [[WriterLease]] (`<root>/LOCK`, heartbeat + fencing epoch)
+  * guards the log: a second store opening the same root fails loudly
+  * (strict mode, the default — a healthy live writer is never fenced) or,
+  * under explicit takeover opt-in (`leaseTimeoutMs = 0`), fences this
+  * one; a fenced writer refuses every mutation instead of interleaving
+  * appends into the winner's log.
   *
   * Durability: every append is in the WAL before the call returns; the
   * heads journal is written on every rare mutation (delete, retention
   * change, empty-stream creation), every [[SparkStreamStore.JournalEvery]] appends, and on
   * [[close]]. Recovery = WAL replay (rows above the last flushed segment)
-  * + journal replay + a tail scan of the log above the journal's position
-  * watermark, so reopening after a clean close is O(journal), not O(log).
+  * + journal replay + a driver fold of the log above the journal's
+  * position watermark, so reopening after a clean close is O(journal),
+  * not O(log), and starts no Spark job.
   * MaxCount cutoffs are re-derived from the recovered heads, so scavenged
   * messages never resurrect after a crash. Heads never regress: deleting a
   * stream's newest message keeps the stream's version/position, as the
@@ -92,7 +94,6 @@ final class SparkStreamStore(
 
   import SparkStreamStore._
   import StreamStoreBase._
-  import spark.implicits._
 
   private val root = rootDir.stripSuffix("/")
   private val journalDir = root + "/heads"
@@ -104,8 +105,8 @@ final class SparkStreamStore(
   /** The live messages generation. [[compact]] writes the merged log into a
     * NEW generation directory and flips the `CURRENT` pointer (LevelDB
     * style), leaving the previous generation on disk until the NEXT compact
-    * — so a lazy [[allMessages]] DataFrame keeps scanning valid files for a
-    * full compact cycle instead of failing mid-scan on a directory swap. */
+    * — so a Spark scan running across the flip keeps reading valid files
+    * instead of failing mid-scan on a directory swap. */
   private var gen: Long = 0L
   private def messagesDir: String = DirectParquet.generationDir(root, gen)
   private val currentPath = new HPath(root + "/CURRENT")
@@ -222,8 +223,8 @@ final class SparkStreamStore(
     * the capped stream re-scavenges past the lost cutoff. */
   private val pendingCutoffs = mutable.Map.empty[String, Tomb]
 
-  /** Readers hold the read side while they decode segment files (or run
-    * a Spark job); [[compact]] (the only file-swapping operation) holds
+  /** Readers hold the read side while they decode segment files;
+    * [[compact]] (the only file-swapping operation) holds
     * the write side. Ordering: the structure lock is always acquired
     * BEFORE `this`. */
   private val structureLock = new ReentrantReadWriteLock()
@@ -444,82 +445,61 @@ final class SparkStreamStore(
   /** In-order (version, messageId) pairs currently stored for a stream —
     * backs the idempotency replay checks. Cached per stream and maintained
     * incrementally; a cache miss (first touch after recovery, or an
-    * evicted over-long chain) falls back to one log query. */
+    * evicted over-long chain) falls back to [[loadChain]]. */
   private def existingIds(streamId: String): IndexedSeq[(Int, String, Long)] =
     chainGet(streamId) match {
       case Some(c) => c
       case None =>
-        val chain = loadChain(messagesDF, streamId)
+        val chain = loadChain(readView(), streamId)
         cacheChain(streamId, chain)
         chain
     }
 
-  /** The cold-chain query: one Spark job over the logical log, sorted on
-    * the driver (a distributed sort would add a sampling job). */
-  private def loadChain(df: DataFrame, streamId: String): IndexedSeq[(Int, String, Long)] =
-    df.filter(col("streamId") === streamId)
-      .select("streamVersion", "messageId", "position")
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._1)
-      .toIndexedSeq
+  /** A cold chain, on the driver: the stream's visible rows among the id
+    * columns of the segments (parquet's statistics and dictionary filters
+    * skip the row groups that cannot hold the stream) and the memtable, in
+    * version order. */
+  private def loadChain(view: ReadView, streamId: String): IndexedSeq[(Int, String, Long)] =
+    (segmentRows(view, _ => true, DirectParquet.streamIs(streamId), IdColumns) ++
+      view.memtable.iterator.filter(_.streamId == streamId))
+      .iterator.filter(view.visible)
+      .map(r => (r.streamVersion, r.messageId, r.position))
+      .toIndexedSeq.sortBy(_._1)
 
   // ------------------------------------------------------------------
   // Reads (ref: ReadAll.sql, Read.sql, ReadonlyStreamStoreBase.cs)
   // ------------------------------------------------------------------
 
-  /** The physical log as a DataFrame: flushed parquet segments ∪ the
-    * in-memory group-commit window (a LocalRelation of at most
-    * `flushEveryRows` rows — filters on the parquet side still push down;
-    * the memtable side is filtered in-memory). Only the Spark surfaces use
-    * it — [[allMessages]], [[compact]], recovery's [[reconcileTail]] and
-    * the cold id-chain load; paged reads decode segments on the driver
-    * instead. Callers must hold `this` (the memtable snapshot and the
-    * segment listing must be consistent). */
-  private def rawMessagesDF: DataFrame = {
-    val base =
-      if (fs.exists(new HPath(messagesDir))) spark.read.schema(MessageSchema).parquet(messagesDir)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MessageSchema)
-    if (memtable.isEmpty) base
-    else base.union(spark.createDataFrame(memtableRows(), MessageSchema))
-  }
+  /** The all-stream as a DataFrame — the Spark-native query surface,
+    * consistent with the paged read API: the segments through
+    * `LogSegmentSource` below the memtable's first position, plus the
+    * memtable rows, filtered by the paged reads' visibility rule over the
+    * delete state of this moment. It keeps the rows it was taken with:
+    * the table re-lists the live segments at each action, and the
+    * position bound keeps rows flushed or compacted since then from
+    * counting twice. */
+  def allMessages: DataFrame = withReadLock(synchronized(visibleLog(spark)))
 
-  private def memtableRows(): java.util.List[Row] = {
-    val out = new java.util.ArrayList[Row](memtable.length)
-    memtable.foreach { r =>
-      out.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, timestampOf(r.createdMicros),
-        r.`type`, r.jsonData, r.jsonMetadata))
-    }
-    out
+  /** [[allMessages]] on `session`. Callers hold `this`. */
+  private def visibleLog(session: SparkSession): DataFrame = {
+    val view = readView()
+    val flushed = session.read.format(classOf[graft.sources.LogSegmentSource].getName)
+      .option("path", root).load()
+      .filter(col("position") < view.memStart)
+    val log =
+      if (view.memtable.isEmpty) flushed
+      else {
+        val rows = new java.util.ArrayList[Row](view.memtable.length)
+        view.memtable.foreach { r =>
+          rows.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, timestampOf(r.createdMicros),
+            r.`type`, r.jsonData, r.jsonMetadata))
+        }
+        flushed.union(session.createDataFrame(rows, MessageSchema))
+      }
+    val d = view.deletes
+    if (d.isEmpty) log
+    else log.filter(udf(d.visible _).apply(col("streamId"), col("streamVersion"), col("position")))
   }
-
-  /** The logical message log: the raw parquet log with tombstones applied
-    * as filters (broadcast joins over the small driver-held delete state).
-    * Callers must hold `this`. */
-  private def messagesDF: DataFrame = {
-    var df = rawMessagesDF
-    if (streamTombs.nonEmpty) {
-      val st = streamTombs.toSeq.toDF("streamId", "_tombPos")
-      df = df.join(broadcast(st), Seq("streamId"), "left_outer")
-        .filter(col("_tombPos").isNull || col("position") > col("_tombPos"))
-        .drop("_tombPos")
-    }
-    if (cutoffs.nonEmpty) {
-      val cf = cutoffs.toSeq.map { case (s, (c, a)) => (s, c, a) }.toDF("streamId", "_ceil", "_asOf")
-      df = df.join(broadcast(cf), Seq("streamId"), "left_outer")
-        .filter(col("_ceil").isNull || col("streamVersion") > col("_ceil") || col("position") > col("_asOf"))
-        .drop("_ceil", "_asOf")
-    }
-    if (msgTombs.nonEmpty) {
-      if (msgTombs.size <= 1000) df = df.filter(!col("position").isin(msgTombs.toSeq: _*))
-      else df = df.join(broadcast(msgTombs.toSeq.toDF("position")), Seq("position"), "left_anti")
-    }
-    df
-  }
-
-  /** The all-stream as a DataFrame — the Spark-native query surface
-    * (tombstone-filtered, consistent with the paged read API). */
-  def allMessages: DataFrame = withReadLock(synchronized(messagesDF))
 
   /** The all-stream as a Structured Streaming source (file source over the
     * append-only log); flushed appends become new micro-batches. Reads the
@@ -586,19 +566,31 @@ final class SparkStreamStore(
 
   /** Callers hold `this`. */
   private def readView(): ReadView =
-    new ReadView(segments, memtable, nextPosition, streamTombs, msgTombs, cutoffs)
+    new ReadView(segments, memtable, nextPosition, Deletes(streamTombs, msgTombs, cutoffs))
 
-  /** Decode `columns` of the rows matching `filter` from every segment
-    * `touches` selects, in position order. Runs outside `this`. */
-  private def segmentRows(view: ReadView, touches: DirectParquet.Segment => Boolean,
-      filter: DirectParquet.PositionFilter, columns: Seq[String]): collection.IndexedSeq[MessageRow] = {
-    val hits = view.segments.filter(s => s.rows > 0 && touches(s))
-    val out = mutable.ArrayBuffer.empty[MessageRow]
-    hits.foreach { s =>
+  /** The memtable and the delete state of one moment, for tests that
+    * check the read rule against a formulation of their own. */
+  private[store] def memtableAndDeletes: (Vector[MessageRow], Deletes) = synchronized {
+    val v = readView()
+    (v.memtable, v.deletes)
+  }
+
+  /** Visit `columns` of the rows matching `filter` in every segment
+    * `touches` selects, segment by segment in file order. Runs outside
+    * `this`. */
+  private def eachSegmentRow(view: ReadView, touches: DirectParquet.Segment => Boolean,
+      filter: DirectParquet.RowFilter, columns: Seq[String])(f: MessageRow => Unit): Unit =
+    view.segments.filter(s => s.rows > 0 && touches(s)).foreach { s =>
       val rows = DirectParquet.read(writeConf,
         DirectParquet.inputFile(writeFs, new HPath(s.path), s.bytes), columns, Some(filter))
-      try rows.foreach(out += _) finally rows.close()
+      try rows.foreach(f) finally rows.close()
     }
+
+  /** [[eachSegmentRow]]'s rows in position order. */
+  private def segmentRows(view: ReadView, touches: DirectParquet.Segment => Boolean,
+      filter: DirectParquet.RowFilter, columns: Seq[String]): collection.IndexedSeq[MessageRow] = {
+    val out = mutable.ArrayBuffer.empty[MessageRow]
+    eachSegmentRow(view, touches, filter, columns)(out += _)
     out.sortInPlaceBy(_.position) // a stream-clustered file is not in position order
     out
   }
@@ -664,25 +656,26 @@ final class SparkStreamStore(
   }
 
   /** The stream's [[StreamView]], or None if it does not exist. A warm
-    * chain costs one O(1) snapshot under `this`. A cold one is loaded by
-    * one Spark job outside `this` and cached only if neither the stream
-    * nor the delete state moved meanwhile; otherwise it is reloaded under
-    * `this`, as an append would. A caller that already holds `this`
-    * (`synchronized` is reentrant) loads a cold chain under it. */
+    * chain costs one O(1) snapshot under `this`. A cold one is loaded
+    * from a read view outside `this` and cached only if neither the
+    * stream nor the delete state moved meanwhile; otherwise it is
+    * reloaded under `this`, as an append would. A caller that already
+    * holds `this` (`synchronized` is reentrant) loads a cold chain under
+    * it. */
   private def streamView(streamId: String): Option[StreamView] = {
     val snap = synchronized {
       heads.get(streamId).map { h =>
         val v = readView()
         chainGet(streamId) match {
           case Some(c) => Left(StreamView(h.version, h.position, h.maxAge, c, v))
-          case None => Right((h.idInternal, h.version, v, messagesDF))
+          case None => Right((h.idInternal, h.version, v))
         }
       }
     }
     snap.map {
       case Left(s) => Some(s)
-      case Right((idInternal, version, before, df)) =>
-        val loaded = loadChain(df, streamId)
+      case Right((idInternal, version, before)) =>
+        val loaded = loadChain(before, streamId)
         synchronized {
           heads.get(streamId).map { h =>
             val v = readView()
@@ -825,15 +818,15 @@ final class SparkStreamStore(
         true
     }
 
-  /** Merge tombstones into the log and squash the journal: rewrite the
-    * filtered log as `targetFiles` position-sorted files into a NEW
+  /** Merge tombstones into the log and squash the journal: rewrite
+    * [[allMessages]] as `targetFiles` position-sorted files into a NEW
     * generation directory, then flip the `CURRENT` pointer. The replaced
-    * generation stays on disk until the NEXT compact, so lazy DataFrames
-    * handed out by [[allMessages]] before this call keep scanning valid
-    * files (one-compact-cycle grace); only the generation two behind is
-    * deleted. Crash-safe without renames: a crash before the pointer flip
-    * leaves an orphan directory that [[recover]] removes; a crash after it
-    * leaves a stale one, ditto. */
+    * generation stays on disk until the NEXT compact, so a Spark scan
+    * running across the flip keeps reading valid files (one-compact-cycle
+    * grace); only the generation two behind is deleted. Crash-safe
+    * without renames: a crash before the pointer flip leaves an orphan
+    * directory that [[recover]] removes; a crash after it leaves a stale
+    * one, ditto. */
   def compact(targetFiles: Int = spark.sparkContext.defaultParallelism): Unit =
     compact(targetFiles, clusterBy = "position")
 
@@ -864,26 +857,18 @@ final class SparkStreamStore(
       val newGen = gen + 1
       val dst = new HPath(DirectParquet.generationDir(root, newGen))
       fs.delete(dst, true) // orphan of a previously crashed attempt
-      // pin TIMESTAMP_MICROS for the compacted generation: Spark's
-      // default INT96 would diverge from the flushed segments' physical
-      // layout (DirectParquet.read decodes both; its INT96 fallback
-      // covers generations compacted before this pin)
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      val prevTs = spark.conf.getOption(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
+      // the compacted generation keeps the flushed segments' timestamp
+      // layout (DirectParquet.read also decodes the INT96 of generations
+      // compacted before that)
+      val log = visibleLog(microsWriter(spark))
       val clustered =
         if (clusterBy == "stream")
-          messagesDF.repartitionByRange(targetFiles, col("streamId"), col("streamVersion"))
+          log.repartitionByRange(targetFiles, col("streamId"), col("streamVersion"))
             .sortWithinPartitions("streamId", "streamVersion")
         else
-          messagesDF.repartitionByRange(targetFiles, col("position"))
+          log.repartitionByRange(targetFiles, col("position"))
             .sortWithinPartitions("position")
-      try clustered
-        .write.mode("overwrite").parquet(dst.toString)
-      finally prevTs match {
-        case Some(v) => spark.conf.set(tsKey, v)
-        case None => spark.conf.unset(tsKey)
-      }
+      clustered.write.mode("overwrite").parquet(dst.toString)
       // the pointer flip is the compaction's one irreversible publish —
       // verify lease ownership synchronously right before it
       lease.pollNow(); lease.ensureValid()
@@ -1236,81 +1221,59 @@ final class SparkStreamStore(
       }
     }
 
-  /** Fold log rows above the journal watermark into the head state: heads
-    * journaled on every rare mutation + every `JournalEvery` appends, so
-    * the tail is bounded; with no journal at all this degrades to the
-    * full-log scan (the round-1 recovery path). Heads never move backward
-    * (deleted tail messages keep their stream's version/position, like the
-    * reference's `streams` table), but the position watermark advances
-    * over deleted rows so positions are never reused. */
+  /** Fold log rows above the journal watermark into the head state, on
+    * the driver: heads are journaled on every rare mutation + every
+    * `JournalEvery` appends, so the tail is bounded; with no journal at
+    * all (a bulk-imported log) this is the whole-log fold, in memory
+    * O(streams). Only stream tombstones hide a row here, so heads never
+    * move backward (deleted tail messages keep their stream's
+    * version/position, like the reference's `streams` table), and the
+    * position watermark advances over deleted rows so positions are never
+    * reused. */
   private def reconcileTail(): Unit = {
-    if (!fs.exists(new HPath(messagesDir))) return
     val watermark = nextPosition
-    var tail = rawMessagesDF
-    if (watermark > 0) tail = tail.filter(col("position") >= watermark)
-    // a stream deleted after the last journal write journals its removal
-    // immediately, so any tail rows it left behind must not resurrect it
-    val alive: org.apache.spark.sql.Column =
-      if (streamTombs.isEmpty) lit(true)
-      else { // join the small tomb map; rows below the stream's asOf are dead
-        col("_tombPos").isNull || col("position") > col("_tombPos")
-      }
-    val joined =
-      if (streamTombs.isEmpty) tail.withColumn("_alive", lit(true))
-      else tail
-        .join(broadcast(streamTombs.toSeq.toDF("streamId", "_tombPos")), Seq("streamId"), "left_outer")
-        .withColumn("_alive", alive)
-    // columns: 0=streamId, 1=rawMax, 2=v, 3=p, 4=first
-    val agg = joined.groupBy("streamId")
-      .agg(
-        max(col("position")).as("rawMax"),
-        max(when(col("_alive"), col("streamVersion"))).as("v"),
-        max(when(col("_alive"), col("position"))).as("p"),
-        min(when(col("_alive"), col("position"))).as("first"))
-      .collect()
-    if (agg.isEmpty) return
-    val created = mutable.ListBuffer.empty[String]
-    agg.sortBy(r => if (r.isNullAt(4)) Long.MaxValue else r.getLong(4)).foreach { r =>
-      val id = r.getString(0)
-      nextPosition = math.max(nextPosition, r.getLong(1) + 1)
-      if (!r.isNullAt(2)) {
-        val v = r.getInt(2)
-        val p = r.getLong(3)
-        heads.get(id) match {
-          case Some(h) =>
-            h.version = math.max(h.version, v)
-            h.position = math.max(h.position, p)
-            heads.persist(id, h)
-            dirtyStreams += id // journal is stale for this head until re-written
-          case None =>
-            heads.putNew(id, new Head(nextIdInternal, v, p, None, None))
-            nextIdInternal += 1
-            created += id
-            dirtyStreams += id // never journaled; keep the journal-completeness invariant
-        }
+    // per stream: the highest position of any row, and the highest
+    // version, highest and lowest position of the rows no stream tombstone
+    // covers (first == Long.MaxValue: none)
+    final class Tail(var rawMax: Long, var version: Int, var last: Long, var first: Long)
+    val tails = mutable.HashMap.empty[String, Tail]
+    eachSegmentRow(readView(), _.maxPos >= watermark, DirectParquet.positionRange(watermark, Long.MaxValue),
+        TailColumns) { r =>
+      val t = tails.getOrElseUpdate(r.streamId, new Tail(-1L, -1, -1L, Long.MaxValue))
+      t.rawMax = math.max(t.rawMax, r.position)
+      // a stream deleted after the last journal write journals its removal
+      // immediately, so any tail rows it left behind must not resurrect it
+      if (streamTombs.get(r.streamId).forall(r.position > _)) {
+        t.version = math.max(t.version, r.streamVersion)
+        t.last = math.max(t.last, r.position)
+        t.first = math.min(t.first, r.position)
       }
     }
-    // retention settings for streams first seen in the tail: latest $$
-    // metadata message wins (ref: streams.max_age/max_count denormalized)
-    val targets = created.filterNot(StreamId.isSystem).filter(id => heads.contains(MetadataStream.of(id)))
-    if (targets.nonEmpty) {
-      import org.apache.spark.sql.expressions.Window
-      val metaIds = targets.map(MetadataStream.of)
-      val w = Window.partitionBy("streamId").orderBy(col("streamVersion").desc)
-      messagesDF
-        .filter(col("streamId").isin(metaIds.toSeq: _*))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("streamId", "jsonData")
-        .collect()
-        .foreach { r =>
-          val target = r.getString(0).drop(2)
-          val m = MetadataJson.read(r.getString(1))
-          heads.get(target).foreach { h =>
-            h.maxAge = m.maxAge; h.maxCount = m.maxCount
-            heads.persist(target, h)
-          }
-        }
+    val created = mutable.ListBuffer.empty[String]
+    tails.toSeq.sortBy(_._2.first).foreach { case (id, t) =>
+      nextPosition = math.max(nextPosition, t.rawMax + 1)
+      if (t.first != Long.MaxValue) heads.get(id) match {
+        case Some(h) =>
+          h.version = math.max(h.version, t.version)
+          h.position = math.max(h.position, t.last)
+          heads.persist(id, h)
+          dirtyStreams += id // journal is stale for this head until re-written
+        case None =>
+          heads.putNew(id, new Head(nextIdInternal, t.version, t.last, None, None))
+          nextIdInternal += 1
+          created += id
+          dirtyStreams += id // never journaled; keep the journal-completeness invariant
+      }
+    }
+    // retention settings for streams first seen in the tail come from
+    // their latest `$$` metadata message (ref: streams.max_age/max_count
+    // denormalized)
+    created.filterNot(StreamId.isSystem).filter(id => heads.contains(MetadataStream.of(id))).foreach { id =>
+      val m = getStreamMetadata(id)
+      heads.get(id).foreach { h =>
+        h.maxAge = m.maxAge; h.maxCount = m.maxCount
+        heads.persist(id, h)
+      }
     }
   }
 
@@ -1369,28 +1332,51 @@ object SparkStreamStore {
   /** Writer-lease heartbeat and verification cadence (see [[WriterLease]]). */
   val LeaseHeartbeatMs = 1000L
 
-  /** What one paged read sees, taken under `this` in O(1): the zone map,
-    * the memtable and the delete state, all immutable values. The
-    * memtable holds exactly the positions `memStart until end`; every
-    * lower position is in a segment or was compacted away. */
+  /** What one read sees, taken under `this` in O(1): the zone map, the
+    * memtable and the delete state, all immutable values. The memtable
+    * holds exactly the positions `memStart until end`; every lower
+    * position is in a segment or was compacted away. */
   private final class ReadView(
       val segments: Vector[DirectParquet.Segment],
       val memtable: Vector[MessageRow],
       val end: Long,
-      val streamTombs: Map[String, Long],
-      val msgTombs: Set[Long],
-      val cutoffs: Map[String, (Int, Long)]) {
+      val deletes: Deletes) {
     val memStart: Long = memtable.headOption.map(_.position).getOrElse(end)
 
-    /** `messagesDF`'s stream-tombstone, cutoff and message-tombstone
-      * filters, row by row. */
-    def visible(r: MessageRow): Boolean =
-      !msgTombs.contains(r.position) &&
-        streamTombs.get(r.streamId).forall(r.position > _) &&
-        cutoffs.get(r.streamId).forall { case (ceil, asOf) => r.streamVersion > ceil || r.position > asOf }
+    /** The store's one read-visibility rule: paged reads, id chains and
+      * [[allMessages]] all apply it. */
+    def visible(r: MessageRow): Boolean = deletes.visible(r.streamId, r.streamVersion, r.position)
 
     def sameDeletes(o: ReadView): Boolean =
-      (streamTombs eq o.streamTombs) && (msgTombs eq o.msgTombs) && (cutoffs eq o.cutoffs)
+      (deletes.streamTombs eq o.deletes.streamTombs) && (deletes.msgTombs eq o.deletes.msgTombs) &&
+        (deletes.cutoffs eq o.deletes.cutoffs)
+  }
+
+  /** The delete state of one moment, an immutable value that Spark can
+    * ship to its tasks: stream tombstones (streamId -> every row at a
+    * position <= asOf is deleted), deleted message positions, and
+    * scavenge cutoffs (streamId -> (version ceiling, asOf position)). */
+  private[store] final case class Deletes(streamTombs: Map[String, Long], msgTombs: Set[Long],
+      cutoffs: Map[String, (Int, Long)]) {
+    def visible(streamId: String, version: Int, position: Long): Boolean =
+      !msgTombs.contains(position) &&
+        streamTombs.get(streamId).forall(position > _) &&
+        cutoffs.get(streamId).forall { case (ceil, asOf) => version > ceil || position > asOf }
+
+    def isEmpty: Boolean = streamTombs.isEmpty && msgTombs.isEmpty && cutoffs.isEmpty
+  }
+
+  /** A child of `spark` with its SQL settings whose parquet writes store
+    * timestamps as INT64 TIMESTAMP(MICROS), the flushed segments' layout,
+    * instead of Spark's INT96 default, without setting anything on `spark`
+    * itself. */
+  private[store] def microsWriter(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    // a new session starts from the context's configuration; carry over
+    // what the caller set at runtime (codec, file sizes, AQE, Hadoop keys)
+    spark.sessionState.conf.getAllConfs.foreach { case (k, v) => s.sessionState.conf.setConfString(k, v) }
+    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    s
   }
 
   /** A stream's head and id chain with a read view, all from one moment. */
@@ -1412,6 +1398,12 @@ object SparkStreamStore {
   /** The columns a stream read decodes besides `jsonData`: its id chain
     * supplies the rest. */
   private val StreamColumns = Seq("position", "createdUtc", "type", "jsonMetadata")
+
+  /** The columns a cold id chain decodes. */
+  private val IdColumns = Seq("streamId", "streamVersion", "messageId", "position")
+
+  /** The columns recovery folds into the heads. */
+  private val TailColumns = Seq("streamId", "streamVersion", "position")
 
   /** Stream-read counters. A read that needs segment rows is a hit when
     * the cache holds all of them and a miss when it decodes some; a read

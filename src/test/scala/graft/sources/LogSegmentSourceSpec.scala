@@ -3,9 +3,15 @@ package graft.sources
 import graft.SparkTestSession
 import graft.core.{ExpectedVersion, NewStreamMessage}
 import graft.store.SparkStreamStore
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The batch DSv2 log table: correctness vs the store's own parquet
   * surface, planning-time segment pruning from position filters, column
@@ -32,6 +38,19 @@ class LogSegmentSourceSpec extends AnyFunSuite {
 
   private def readLog(root: String) =
     spark.read.format("graft.sources.LogSegmentSource").option("path", root).load()
+
+  /** The footers of the parquet files of the store's live generation. */
+  private def liveFooters(dir: String): Seq[(java.io.File, ParquetMetadata)] = {
+    val gen = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/CURRENT")).trim
+    val files = new java.io.File(s"$dir/messages-g$gen").listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    files.toSeq.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try f -> reader.getFooter finally reader.close()
+    }
+  }
 
   private def scanExec(df: org.apache.spark.sql.DataFrame): BatchScanExec =
     df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.getOrElse(
@@ -98,14 +117,31 @@ class LogSegmentSourceSpec extends AnyFunSuite {
     try {
       val before = readLog(dir).select("position", "createdUtc")
         .orderBy("position").collect()
-      // simulate a generation compacted before the TIMESTAMP_MICROS pin
+      // simulate a generation compacted before the TIMESTAMP_MICROS pin;
+      // the caller's other runtime settings (the codec) must still apply
       spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-      try store.compact(targetFiles = 2)
-      finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
+      try {
+        store.compact(targetFiles = 2)
+        assert(spark.conf.get("spark.sql.parquet.outputTimestampType") === "INT96",
+          "compact must leave the caller's session setting alone")
+      } finally {
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+        spark.conf.unset("spark.sql.parquet.compression.codec")
+      }
       // compact's own pin overrides the session value, so force a truly
       // INT96 generation by rewriting the current generation directly
       val gen = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/CURRENT")).trim
       val genDir = s"$dir/messages-g$gen"
+      liveFooters(dir).foreach { case (f, footer) =>
+        val schema = footer.getFileMetaData.getSchema
+        val created = schema.getType(schema.getFieldIndex("createdUtc")).asPrimitiveType
+        assert(created.getPrimitiveTypeName === PrimitiveTypeName.INT64, s"$f")
+        assert(created.getLogicalTypeAnnotation ===
+          LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS), s"$f")
+        val codecs = footer.getBlocks.asScala.flatMap(_.getColumns.asScala).map(_.getCodec).toSet
+        assert(codecs === Set(CompressionCodecName.GZIP), s"$f")
+      }
       val rows = spark.read.schema(SparkStreamStore.MessageSchema).parquet(genDir)
       spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
       try rows.write.mode("overwrite").parquet(s"$dir/messages-int96-tmp")
@@ -120,6 +156,31 @@ class LogSegmentSourceSpec extends AnyFunSuite {
         .orderBy("position").collect()
       assert(after.toSeq === before.toSeq, "INT96 createdUtc decoded wrong")
     } finally store.close()
+  }
+
+  test("the table plans and reads with the session's Hadoop configuration") {
+    val dir = SparkTestSession.tempDir("logseg-conf")
+    val store = buildStore(dir, batches = 2, perBatch = 50)
+    // a filesystem scheme that only the session's configuration knows
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.markfs.impl", "fs.markfs.impl.disable.cache", MarkerFileSystem.Key)
+    hc.set("fs.markfs.impl", classOf[MarkerFileSystem].getName)
+    hc.set("fs.markfs.impl.disable.cache", "true")
+    hc.set(MarkerFileSystem.Key, "session")
+    MarkerFileSystem.seen.clear()
+    try {
+      // a filter keeps the scan from being answered by footers alone
+      val positions = readLog("markfs://" + dir).filter(col("position") >= 0L).select("position")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(positions === (0L until 100L))
+      val seen = MarkerFileSystem.seen.asScala.toSeq
+      assert(seen.nonEmpty && seen.forall(_._2 == "session"), seen)
+      assert(seen.exists(_._1.startsWith("Executor task launch worker")),
+        s"no segment was opened by a task: $seen")
+    } finally {
+      keys.foreach(hc.unset)
+      store.close()
+    }
   }
 
   test("column pruning reaches the scan and jsonData is not decoded") {
@@ -212,4 +273,20 @@ class LogSegmentSourceSpec extends AnyFunSuite {
       assert(readLog(dir).count() === 10)
     } finally reopened.close()
   }
+}
+
+/** The local filesystem under the `markfs` scheme, recording the thread
+  * and the marker key's value of each configuration it is opened with. */
+class MarkerFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "markfs"
+  override def getUri: java.net.URI = java.net.URI.create("markfs:///")
+  override def initialize(uri: java.net.URI, conf: Configuration): Unit = {
+    super.initialize(uri, conf)
+    MarkerFileSystem.seen.add(Thread.currentThread.getName -> conf.get(MarkerFileSystem.Key))
+  }
+}
+
+object MarkerFileSystem {
+  val Key = "graft.test.marker"
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
 }

@@ -2,7 +2,8 @@ package graft.store
 
 import graft.SparkTestSession
 import graft.core._
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.time.Instant
@@ -10,9 +11,11 @@ import scala.collection.mutable
 import scala.util.Random
 
 /** Differential test of the parquet store's driver-served paged reads
-  * against a Spark oracle: the tombstone-filtered `allMessages` DataFrame
-  * with the filter / order / limit each read used to run as a Spark job,
-  * then the same TTL drop. Seeded random op sequences (appends with every
+  * against a Spark oracle: the physical log (`LogSegmentSource` plus the
+  * memtable) with the store's delete state applied as broadcast joins —
+  * a formulation of the delete rule of its own, since `allMessages`
+  * applies the store's rule — with the filter / order / limit each read
+  * used to run as a Spark job, then the same TTL drop. Seeded random op sequences (appends with every
   * expected-version kind including idempotent replays, message and stream
   * deletes with re-creation, MaxCount / MaxAge metadata under a manual
   * clock, flushes, both compaction layouts (one to three stream-clustered
@@ -26,6 +29,7 @@ import scala.util.Random
   * fails the test. */
 class DriverReadDifferentialSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
+  import spark.implicits._
   private val FlushEvery = 7
   private val Streams = (0 until 5).map(i => s"s$i")
 
@@ -104,13 +108,47 @@ class DriverReadDifferentialSpec extends AnyFunSuite {
       !StreamId.isSystem(m.streamId) && maxAge.get(m.streamId).exists(a =>
         !m.createdUtc.toInstant.plusSeconds(a.toLong).isAfter(clock.nowUtc))
 
+    /** The logical log: the segments below the memtable, the memtable,
+      * and the store's tombstones applied as filters (broadcast joins over
+      * the small delete state). */
+    def oracleMessages: DataFrame = {
+      val (memtable, deletes) = store.memtableAndDeletes
+      val memStart = memtable.headOption.map(_.position).getOrElse(Long.MaxValue)
+      val memRows = new java.util.ArrayList[Row]()
+      memtable.foreach { r =>
+        val ts = new java.sql.Timestamp(Math.floorDiv(r.createdMicros, 1000000L) * 1000L)
+        ts.setNanos((Math.floorMod(r.createdMicros, 1000000L) * 1000L).toInt)
+        memRows.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, ts, r.`type`, r.jsonData, r.jsonMetadata))
+      }
+      var df = spark.read.format("graft.sources.LogSegmentSource").option("path", dir).load()
+        .filter(col("position") < memStart)
+        .union(spark.createDataFrame(memRows, SparkStreamStore.MessageSchema))
+      val streamTombs = deletes.streamTombs
+      val cutoffs = deletes.cutoffs
+      val msgTombs = deletes.msgTombs
+      if (streamTombs.nonEmpty) {
+        val st = streamTombs.toSeq.toDF("streamId", "_tombPos")
+        df = df.join(broadcast(st), Seq("streamId"), "left_outer")
+          .filter(col("_tombPos").isNull || col("position") > col("_tombPos"))
+          .drop("_tombPos")
+      }
+      if (cutoffs.nonEmpty) {
+        val cf = cutoffs.toSeq.map { case (s, (c, a)) => (s, c, a) }.toDF("streamId", "_ceil", "_asOf")
+        df = df.join(broadcast(cf), Seq("streamId"), "left_outer")
+          .filter(col("_ceil").isNull || col("streamVersion") > col("_ceil") || col("position") > col("_asOf"))
+          .drop("_ceil", "_asOf")
+      }
+      if (msgTombs.nonEmpty) df = df.filter(!col("position").isin(msgTombs.toSeq: _*))
+      df
+    }
+
     def toMessage(r: org.apache.spark.sql.Row, prefetch: Boolean): StreamMessage =
       StreamMessage(r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getTimestamp(4),
         r.getString(5), if (prefetch) r.getString(6) else null, r.getString(7))
 
     def oracleAllForwards(from: Long, n: Int, prefetch: Boolean): AllView = {
       val fromPos = if (from == Position.End) Long.MaxValue else from
-      val rows = store.allMessages.filter(col("position") >= fromPos).orderBy(col("position"))
+      val rows = oracleMessages.filter(col("position") >= fromPos).orderBy(col("position"))
         .limit(n + 1).collect().map(toMessage(_, prefetch))
       val isEnd = rows.length <= n
       val page = rows.take(n).toSeq
@@ -120,7 +158,7 @@ class DriverReadDifferentialSpec extends AnyFunSuite {
 
     def oracleAllBackwards(from: Long, n: Int, prefetch: Boolean): AllView = {
       val fromPos = if (from == Position.End) Long.MaxValue else from
-      val rows = store.allMessages.filter(col("position") <= fromPos).orderBy(col("position").desc)
+      val rows = oracleMessages.filter(col("position") <= fromPos).orderBy(col("position").desc)
         .limit(n + 1).collect().map(toMessage(_, prefetch))
       if (rows.isEmpty) AllView(Nil, isEnd = true, Position.Start, Position.Start)
       else {
@@ -138,7 +176,7 @@ class DriverReadDifferentialSpec extends AnyFunSuite {
         StreamPageView(PageReadStatus.StreamNotFound, Nil, isEnd = true, StreamVersion.End, StreamVersion.End, Position.End)
       else {
         val v = col("streamVersion")
-        val inStream = store.allMessages.filter(col("streamId") === sid)
+        val inStream = oracleMessages.filter(col("streamId") === sid)
         val rows = (if (forward) inStream.filter(v >= math.max(from, 0)).orderBy(v)
           else inStream.filter(v <= (if (from == StreamVersion.End) Int.MaxValue else from)).orderBy(v.desc))
           .limit(n + 1).collect().map(toMessage(_, prefetch))
@@ -200,7 +238,7 @@ class DriverReadDifferentialSpec extends AnyFunSuite {
           val sid = Streams(rnd.nextInt(Streams.size))
           val v = rnd.nextInt(math.max(1, store.readStreamHeadVersion(sid) + 2))
           settle(s"readMessageData($sid, $v)",
-            () => store.allMessages.filter(col("streamId") === sid && col("streamVersion") === v)
+            () => oracleMessages.filter(col("streamId") === sid && col("streamVersion") === v)
               .select("jsonData").collect().headOption.map(_.getString(0)),
             () => store.readMessageData(sid, v))
         case _ =>

@@ -221,6 +221,24 @@ class DurabilityConcurrencySpec extends AnyFunSuite {
     } finally store.close()
   }
 
+  test("a lazy allMessages DataFrame keeps its rows across a flush, appends and a compact") {
+    val dir = SparkTestSession.tempDir("graft-lazysnapshot")
+    val store = new SparkStreamStore(spark, dir)
+    try {
+      store.appendToStream("a", ExpectedVersion.NoStream, msgs(1 to 10: _*))
+      store.flush()
+      store.appendToStream("a", 9, msgs(11 to 15: _*)) // in the memtable
+      val lazyDf = store.allMessages
+      def positions = lazyDf.select("position").collect().map(_.getLong(0)).sorted.toSeq
+      store.flush() // the memtable rows now also sit in a segment
+      store.appendToStream("a", 14, msgs(16 to 18: _*))
+      assert(positions === (0L until 15L))
+      store.compact() // one new generation holds every row
+      assert(positions === (0L until 15L))
+      assert(store.allMessages.count() === 18L)
+    } finally store.close()
+  }
+
   test("reads run concurrently with appends and see consistent pages") {
     val dir = SparkTestSession.tempDir("graft-concurrent")
     val store = new SparkStreamStore(spark, dir)

@@ -110,6 +110,26 @@ class GroupCommitSpec extends AnyFunSuite {
     } finally s2.close()
   }
 
+  test("a stream tombstone written just before a crash keeps the stream's unjournaled rows from recreating it") {
+    val dir = SparkTestSession.tempDir("graft-gc-tombcrash")
+    val s1 = new SparkStreamStore(spark, dir)
+    s1.appendToStream("a", ExpectedVersion.NoStream, msgs(1, 2))
+    s1.appendToStream("b", ExpectedVersion.NoStream, msgs(3))
+    // crash inside deleteStream("a"): its tombstone is written, but not
+    // the journal's removal marker, and no journal holds "a" at all
+    val f = fs(dir)
+    val out = f.create(new HPath(dir + "/tombstones/tomb-00000000000000000000.json"), true)
+    try out.write("""{"seq":0,"kind":"stream","streamId":"a","asOf":1}""".getBytes(StandardCharsets.UTF_8) ++ Array('\n'.toByte))
+    finally out.close()
+    val s2 = new SparkStreamStore(spark, dir, leaseTimeoutMs = 0L)
+    try {
+      assert(s2.readStreamHeadVersion("a") === StreamVersion.End, "the tombstoned rows must not recreate the stream")
+      assert(s2.readStreamHeadVersion("b") === 0)
+      assert(s2.appendToStream("c", ExpectedVersion.NoStream, msgs(4)).currentPosition === 3L,
+        "positions of the deleted rows are not reused")
+    } finally s2.close()
+  }
+
   test("scavenged messages stay scavenged after a crash (cutoffs re-derived from heads)") {
     val dir = SparkTestSession.tempDir("graft-gc-cutoff")
     val s1 = new SparkStreamStore(spark, dir)
