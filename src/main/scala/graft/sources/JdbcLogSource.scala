@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,14 +19,14 @@ import scala.jdk.CollectionConverters._
   * all beyond polling subscriptions; this is the Spark-native upgrade:
   * the relational log becomes a first-class micro-batch stream.
   *
-  * DataSource V2 micro-batch source: offsets are log positions (the
-  * store-wide dense sequence), `latestOffset` polls `MAX(position)` with
-  * one driver-side query per trigger (the same polling model as the
-  * reference's `PollingStreamStoreNotifier.cs:51-82`), and each batch's
-  * position range `(start, end]` is split into range partitions that
-  * executors read in parallel straight from the database — so catch-up
-  * over a large backlog scales with the cluster, and the steady-state
-  * tail is one small indexed range scan per trigger.
+  * DataSource V2 micro-batch source on [[PositionLogStream]]: offsets are
+  * log positions (the store-wide dense sequence), `latestOffset` polls
+  * `MAX(position)` with one driver-side query per trigger (the same
+  * polling model as the reference's `PollingStreamStoreNotifier.cs:51-82`),
+  * and each batch's position range `(start, end]` is split into range
+  * partitions that executors read in parallel straight from the database
+  * — so catch-up over a large backlog scales with the cluster, and the
+  * steady-state tail is one small indexed range scan per trigger.
   *
   * Usage:
   * {{{
@@ -105,27 +105,13 @@ private class JdbcLogTable(props: Map[String, String]) extends Table with Suppor
     }
 }
 
-/** Offset = highest position included so far (exclusive start of the
-  * next batch). Dense single-writer positions make ranges replayable. */
-private case class JdbcLogOffset(position: Long) extends Offset {
-  override def json(): String = position.toString
-}
-
 private class JdbcLogMicroBatchStream(url: String, numPartitions: Int, fromPosition: Long)
-  extends MicroBatchStream {
+  extends PositionLogStream(fromPosition) {
 
-  override def initialOffset(): Offset = JdbcLogOffset(fromPosition)
+  override protected def head(): Long = JdbcLogSource.maxPosition(url)
 
-  override def latestOffset(): Offset =
-    JdbcLogOffset(math.max(fromPosition, JdbcLogSource.maxPosition(url)))
-
-  override def deserializeOffset(json: String): Offset = JdbcLogOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[JdbcLogOffset].position
-    val hi = end.asInstanceOf[JdbcLogOffset].position
+  override protected def partitions(lo: Long, hi: Long): Array[InputPartition] = {
     val n = hi - lo
-    if (n <= 0) return Array.empty
     val parts = math.min(numPartitions.toLong, n).toInt
     val step = math.ceil(n.toDouble / parts).toLong
     (0 until parts).iterator
@@ -135,9 +121,6 @@ private class JdbcLogMicroBatchStream(url: String, numPartitions: Int, fromPosit
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new JdbcLogReaderFactory
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 private case class JdbcLogPartition(url: String, lo: Long, hi: Long) extends InputPartition

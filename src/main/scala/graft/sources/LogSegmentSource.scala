@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -20,10 +21,12 @@ import org.apache.spark.util.SerializableConfiguration
 import java.util.{Map => JMap, OptionalLong}
 import scala.jdk.CollectionConverters._
 
-/** Batch DataSource V2 over a [[graft.store.SparkStreamStore]] segment log
-  * — the store's PHYSICAL message log (the append-only firehose, same
-  * surface as `allMessagesStream`) as a first-class Spark batch table with
-  * the pushdowns a 100 TB log needs:
+/** DataSource V2 over a [[graft.store.SparkStreamStore]] segment log —
+  * the store's PHYSICAL message log (the append-only firehose) as a
+  * first-class Spark table. It streams (`spark.readStream`, the store's
+  * `allMessagesStream`) as a micro-batch source with log positions as
+  * offsets, [[PositionLogStream]], the same core as [[JdbcLogSource]].
+  * It reads in batch with the pushdowns a 100 TB log needs:
   *
   *   - '''planning-time segment pruning''': every segment is position-
   *     sorted (`SparkStreamStore.flushMemtable` writes each group-commit
@@ -50,8 +53,17 @@ import scala.jdk.CollectionConverters._
   * parquet zone maps give the built-in reader, lifted to whole segments.
   *
   * Deletes are logical in this store (tombstones applied by the read
-  * API and by `allMessages`, which reads this table and filters it); like
-  * `allMessagesStream`, this table exposes the append-only physical log.
+  * API and by `allMessages`, which reads this table and filters it); both
+  * the batch table and the stream expose the append-only physical log.
+  *
+  * The stream's head is the highest position among the live generation's
+  * segments, re-resolved at every trigger, so a compaction's generation
+  * flip never strands it; a trigger reads only the footers of new
+  * segments. A batch `(start, end]` reads the segments that overlap it,
+  * and one that straddles a bound (a compacted file, say) is filtered to
+  * the range, so each position arrives exactly once. Rows enter the
+  * stream when their segment is flushed: the store's memtable lives only
+  * in its driver.
   *
   * Usage:
   * {{{
@@ -60,6 +72,10 @@ import scala.jdk.CollectionConverters._
   *   .load()
   *   .filter($"position" >= tailStart)   // prunes segments at plan time
   *   .select("streamId", "position")     // never decodes jsonData
+  *
+  * spark.readStream.format("graft.sources.LogSegmentSource")
+  *   .option("path", storeRootDir)       // every flushed position, in order
+  *   .load()
   * }}}
   */
 class LogSegmentSource extends TableProvider {
@@ -120,7 +136,7 @@ private class LogSegmentTable(props: Map[String, String]) extends Table with Sup
   override def name(): String = s"graft-log($root)"
   override def schema(): StructType = LogSegmentSource.Schema
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new LogSegmentScanBuilder(root)
@@ -187,7 +203,7 @@ private class LogSegmentScanBuilder(root: String)
 private class LogSegmentScan(
     root: String,
     conf: Configuration,
-    allSegments: Seq[DirectParquet.Segment],
+    allSegments: => Seq[DirectParquet.Segment],
     required: StructType,
     pushed: Array[Filter],
     limit: Int,
@@ -201,6 +217,8 @@ private class LogSegmentScan(
 
   override def readSchema(): StructType = aggSchema.getOrElse(required)
   override def toBatch: Batch = this
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new LogSegmentStream(root, conf, required.fieldNames)
 
   override def description(): String = {
     val cols = readSchema().fieldNames.mkString(",")
@@ -228,17 +246,44 @@ private class LogSegmentScan(
         if (segments.isEmpty) null else java.lang.Long.valueOf(segments.map(_.maxPos).max)
       Array(LogFooterAggPartition(s.fieldNames, minPos, maxPos, rows))
     case None =>
-      segments.map(s => LogSegmentPartition(s.path, s.bytes, required.fieldNames, limit): InputPartition).toArray
+      segments.map(s => LogSegmentPartition(s.path, s.bytes, required.fieldNames, limit, None): InputPartition).toArray
   }
 
-  // broadcast, as Spark's own file scans do: a broadcast value is
-  // deserialized once per executor, the task binary by every task (~10 ms
-  // for the ~1,100 keys of a default configuration)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LogSegmentReaderFactory(SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf)))
+  override def createReaderFactory(): PartitionReaderFactory = LogSegmentReaderFactory(conf)
 }
 
-private case class LogSegmentPartition(path: String, bytes: Long, columns: Array[String], limit: Int)
+/** The table's micro-batch stream (see the class doc of [[LogSegmentSource]]). */
+private class LogSegmentStream(root: String, conf: Configuration, columns: Array[String])
+  extends PositionLogStream(-1L) {
+  private var footers = Map.empty[String, DirectParquet.Segment]
+
+  /** The live generation's non-empty segments (an empty one, such as the
+    * compaction of a fully deleted log, has no position range). */
+  private def live(): Seq[DirectParquet.Segment] = synchronized {
+    val fs = new HPath(root).getFileSystem(conf)
+    val segments = DirectParquet.listSegments(conf,
+      DirectParquet.generationDir(root, DirectParquet.liveGeneration(fs, root)), footers)
+    footers = segments.map(s => s.path -> s).toMap
+    segments.filter(_.rows > 0)
+  }
+
+  override protected def head(): Long = live().map(_.maxPos).maxOption.getOrElse(-1L)
+
+  override protected def partitions(lo: Long, hi: Long): Array[InputPartition] =
+    live().filter(s => s.maxPos > lo && s.minPos <= hi).map { s =>
+      val range = if (s.minPos > lo && s.maxPos <= hi) None else Some((lo + 1, hi))
+      LogSegmentPartition(s.path, s.bytes, columns, -1, range): InputPartition
+    }.toArray
+
+  // one broadcast for the stream's life, not one per trigger
+  private lazy val readerFactory = LogSegmentReaderFactory(conf)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+}
+
+/** One segment to read: `columns`, at most `limit` rows when >= 0, and
+  * only the positions in the inclusive range `positions` when set. */
+private case class LogSegmentPartition(path: String, bytes: Long, columns: Array[String], limit: Int,
+    positions: Option[(Long, Long)])
   extends InputPartition
 
 /** The footer-derived answer to a fully-pushed aggregation: one row,
@@ -246,6 +291,14 @@ private case class LogSegmentPartition(path: String, bytes: Long, columns: Array
 private case class LogFooterAggPartition(
     fields: Array[String], minPos: java.lang.Long, maxPos: java.lang.Long, rows: Long)
   extends InputPartition
+
+private object LogSegmentReaderFactory {
+  // broadcast, as Spark's own file scans do: a broadcast value is
+  // deserialized once per executor, the task binary by every task (~10 ms
+  // for the ~1,100 keys of a default configuration)
+  def apply(conf: Configuration): LogSegmentReaderFactory =
+    new LogSegmentReaderFactory(SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf)))
+}
 
 private class LogSegmentReaderFactory(conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
@@ -270,7 +323,8 @@ private class LogSegmentReaderFactory(conf: Broadcast[SerializableConfiguration]
     val path = new HPath(p.path)
     val hconf = conf.value.value
     val rows = DirectParquet.read(hconf,
-      DirectParquet.inputFile(path.getFileSystem(hconf), path, p.bytes), p.columns.toSeq, None)
+      DirectParquet.inputFile(path.getFileSystem(hconf), path, p.bytes), p.columns.toSeq,
+      p.positions.map { case (lo, hi) => DirectParquet.positionRange(lo, hi) })
 
     new PartitionReader[InternalRow] {
       private var current: MessageRow = _

@@ -131,15 +131,17 @@ private[graft] object DirectParquet {
 
   /** List the segments of one messages generation and read each footer
     * ONCE for exact position min/max + row count. Driver-side metadata
-    * pass, one footer IO per segment: the store's zone map and
+    * pass, one footer IO per segment not in `known` (segments by path; a
+    * published segment never changes): the store's zone map and
     * `LogSegmentSource`'s planning-time pruning both come from it. */
-  def listSegments(conf: Configuration, dir: String): Seq[Segment] = {
+  def listSegments(conf: Configuration, dir: String,
+      known: Map[String, Segment] = Map.empty): Seq[Segment] = {
     val fs = new HPath(dir).getFileSystem(conf)
     if (!fs.exists(new HPath(dir))) return Seq.empty
     fs.listStatus(new HPath(dir)).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
-      .map { st =>
+      .map(st => known.getOrElse(st.getPath.toString, {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
         try {
           val footer = reader.getFooter
@@ -161,7 +163,7 @@ private[graft] object DirectParquet {
           if (minPos > maxPos) { minPos = Long.MinValue; maxPos = Long.MaxValue }
           Segment(st.getPath.toString, st.getLen, rows, minPos, maxPos)
         } finally reader.close()
-      }
+      }))
   }
 
   /** A segment file opened through an existing FileSystem instance, with

@@ -87,13 +87,14 @@ final class SparkStreamStore(
     trackDeletes: Boolean = true,
     autoCompactEvery: Int = 0, // >0: background-compact after that many flushed log segments
     flushEveryRows: Int = 4096, // group-commit window: flush the memtable to a parquet segment after this many buffered rows (or FlushEveryBytes of payload, whichever comes first)
-    headCacheCapacity: Int = 0, // >0: bound driver head memory to an LRU of this many hot heads over an embedded Derby spill from the start (0 = in memory until autoSpillHeads)
-    autoSpillHeads: Long = 1L << 20, // with headCacheCapacity = 0: head count at which the in-memory store migrates to the Derby spill (~100 MB of driver heap); <= 0 disables auto-spill
+    autoSpillHeads: Long = 1L << 20, // head count (> 0) at which heads migrate from memory (~100 MB of driver heap at the default) to an embedded Derby spill that keeps min(autoSpillHeads, 65536) hot heads
     leaseTimeoutMs: Long = 30000L) // cross-process writer lease mode: >0 = STRICT (default; a second open fails loudly unless the holder's heartbeat is older than this, so a live writer is never fenced and never loses acked appends — r15 advice); 0 = explicit takeover-with-fencing (crash restarts never wait, but a live previous writer is fenced and its in-flight acks lose at recovery)
   extends StreamStoreBase[Head](clock, trackDeletes) {
 
   import SparkStreamStore._
   import StreamStoreBase._
+
+  require(autoSpillHeads > 0, s"autoSpillHeads must be > 0: $autoSpillHeads")
 
   private val root = rootDir.stripSuffix("/")
   private val journalDir = root + "/heads"
@@ -138,26 +139,16 @@ final class SparkStreamStore(
     * `streams` table, `SqlStreamStore.Postgres/PgSqlScripts/Tables.sql:4-15`)
     * behind the [[HeadStore]] interface, which also carries the
     * creation-order (idInternal) index that [[listStreams]] seeks in
-    * O(log n) per page. Default is all-in-memory (~100 B each; 100M
-    * streams ≈ 10 GB — the single-writer driver is the streams-table
-    * owner, as the RDBMS was in the reference). With
-    * `headCacheCapacity > 0` heads spill to an embedded Derby table with
-    * an LRU of hot entries, so driver memory is flat in stream
-    * cardinality; the heads journal stays the durability story either way
-    * (the spill db is scratch, rebuilt by recovery), and [[streamsDF]] is
-    * the distributed listing surface. */
-  private val heads: HeadStore =
-    if (headCacheCapacity > 0)
-      new DerbyHeadStore(
-        java.nio.file.Files.createTempDirectory("graft-heads").toString, headCacheCapacity)
-    else if (autoSpillHeads > 0)
-      // default: in memory while small, migrating to the Derby spill when
-      // the head count crosses the bound — the 100M-stream safety without
-      // the opt-in (round-5 verdict stretch #9)
-      new AutoSpillHeadStore(
-        () => java.nio.file.Files.createTempDirectory("graft-heads").toString,
-        autoSpillHeads, cacheCapacity = 65536)
-    else new InMemoryHeadStore
+    * O(log n) per page. Heads live in memory (~100 B each) until there are
+    * `autoSpillHeads` of them, then migrate to an embedded Derby table
+    * with an LRU of `min(autoSpillHeads, 65536)` hot entries — never more
+    * than memory held before the spill — so driver memory is flat
+    * in stream cardinality; the heads journal stays the durability story
+    * either way (the spill db is scratch, rebuilt by recovery), and
+    * [[streamsDF]] is the distributed listing surface. */
+  private val heads: HeadStore = new AutoSpillHeadStore(
+    () => java.nio.file.Files.createTempDirectory("graft-heads").toString,
+    autoSpillHeads, cacheCapacity = math.min(autoSpillHeads, 65536L).toInt)
   private var nextPosition: Long = Position.Start
   private var nextIdInternal: Long = 0L
 
@@ -407,7 +398,11 @@ final class SparkStreamStore(
     // before every segment write, so a fenced writer can never publish
     lease.pollNow(); lease.ensureValid()
     val path = new HPath(messagesDir, f"part-${memtable.head.position}%020d-${UUID.randomUUID().toString.take(8)}.parquet")
-    DirectParquet.write(writeConf, path, memtable)
+    // published by rename: a reader listing the directory (a running
+    // stream, an external scan) never opens a half-written segment
+    val written = new HPath(messagesDir, s".${path.getName}.tmp")
+    DirectParquet.write(writeConf, written, memtable)
+    if (!writeFs.rename(written, path)) throw new java.io.IOException(s"could not publish segment $path")
     segments :+= DirectParquet.Segment(path.toString, writeFs.getFileStatus(path).getLen,
       memtable.length, memtable.head.position, memtable.last.position)
     memtable = Vector.empty
@@ -501,17 +496,19 @@ final class SparkStreamStore(
     else log.filter(udf(d.visible _).apply(col("streamId"), col("streamVersion"), col("position")))
   }
 
-  /** The all-stream as a Structured Streaming source (file source over the
-    * append-only log); flushed appends become new micro-batches. Reads the
-    * PHYSICAL log: deletions are logical (tombstones) and appear here —
-    * this surface is the append-only firehose; use the paged read API or
-    * [[allMessages]] for delete-aware views. Granularity is the
-    * group-commit window: rows enter the stream when their segment is
-    * flushed ([[flush]] forces the open window; this method flushes it on
-    * call so pre-existing rows are visible from the first micro-batch). */
+  /** The all-stream as a Structured Streaming source: `LogSegmentSource`
+    * over this root, a micro-batch stream whose offsets are log positions,
+    * so every flushed position arrives once, in position order, across
+    * compactions. Reads the PHYSICAL log: deletions are logical
+    * (tombstones) and appear here — this surface is the append-only
+    * firehose; use the paged read API or [[allMessages]] for delete-aware
+    * views. Granularity is the group-commit window: rows enter the stream
+    * when their segment is flushed ([[flush]] forces the open window; this
+    * method flushes it on call so pre-existing rows are visible from the
+    * first micro-batch). */
   def allMessagesStream: DataFrame = {
     flush()
-    spark.readStream.schema(MessageSchema).parquet(messagesDir)
+    spark.readStream.format(classOf[graft.sources.LogSegmentSource].getName).option("path", root).load()
   }
 
   /** Submit to the background executor, tolerating a concurrent close()

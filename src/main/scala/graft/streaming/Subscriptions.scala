@@ -39,8 +39,8 @@ trait Subscription extends AutoCloseable {
   *
   * For the Spark-native streaming surface (micro-batch DataFrames instead
   * of per-message callbacks) see [[graft.store.SparkStreamStore.allMessagesStream]]:
-  * Structured Streaming file source over the append-only log, where the
-  * checkpointed file offset plays the role of the continuation position.
+  * a Structured Streaming source over the append-only log whose
+  * checkpointed offset is the continuation position itself.
   */
 object Subscriptions {
 
@@ -113,17 +113,16 @@ object Subscriptions {
     }.started()
 
   /** Structured Streaming variant of SubscribeToAll: a streaming query
-    * over the append-only log directory (file source — new append files
-    * become micro-batches; the checkpointed file offset plays the role of
-    * the continuation position). Messages are delivered in position order
-    * within each micro-batch on the driver, mirroring the reference's
-    * strictly-sequential push (`AllStreamSubscription.cs:207-232`).
+    * over the append-only log ([[graft.store.SparkStreamStore.allMessagesStream]]
+    * — each micro-batch is the flushed position range after the last one,
+    * and the checkpointed offset is the continuation position). Messages
+    * are delivered in position order, within and across micro-batches, on
+    * the driver, mirroring the reference's strictly-sequential push
+    * (`AllStreamSubscription.cs:207-232`).
     *
     * This surface reads the PHYSICAL log: it is the append-only firehose
-    * (logically-deleted rows still appear; position order across
-    * micro-batches follows file-discovery order, which matches append
-    * order for a single writer). For exact reference semantics including
-    * tombstone-filtered reads, use [[subscribeToAll]].
+    * (logically-deleted rows still appear). For exact reference semantics
+    * including tombstone-filtered reads, use [[subscribeToAll]].
     */
   def structuredSubscribeToAll(
       store: SparkStreamStore,

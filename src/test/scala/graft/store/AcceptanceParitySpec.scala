@@ -449,14 +449,15 @@ class AcceptanceParitySpec extends StoreAcceptanceBehaviors {
 }
 
 /** The same acceptance behaviors over the parquet store with heads
-  * spilled to Derby and only 8 hot heads in memory — every behavior must
-  * be oblivious to whether a head was resident or reloaded. */
+  * spilled to Derby from the first stream on and only 1 hot head in
+  * memory — every behavior must be oblivious to whether a head was
+  * resident or reloaded. */
 class BoundedHeadsAcceptanceSpec extends StoreAcceptanceBehaviors {
   protected def withStore[T](name: String, trackDeletes: Boolean = true,
       clock: Clock = Clock.System)(f: StreamStore => T): T = {
     val store = new SparkStreamStore(SparkTestSession.spark,
       SparkTestSession.tempDir(name), clock, trackDeletes = trackDeletes,
-      headCacheCapacity = 8)
+      autoSpillHeads = 1)
     try f(store) finally store.close()
   }
 }

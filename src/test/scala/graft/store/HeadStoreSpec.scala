@@ -102,7 +102,7 @@ class HeadStoreSpec extends AnyFunSuite {
   test("bounded store: full behavior round-trip with an 8-entry hot cache, surviving reopen") {
     val spark = SparkTestSession.spark
     val dir = SparkTestSession.tempDir("graft-bounded")
-    def open() = new SparkStreamStore(spark, dir, headCacheCapacity = 8)
+    def open() = new SparkStreamStore(spark, dir, autoSpillHeads = 8)
     val store = open()
     val msg = (n: Int) => Seq(NewStreamMessage(f"00000000-0000-0000-0000-$n%012d", "t", s"""{"n":$n}"""))
     try {
